@@ -27,6 +27,7 @@ import math
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from grpc_map_reduce_spark.functions.text import (
     distinct_shingle_hashes_udf,
@@ -416,8 +417,7 @@ def _shingle_sets(docs: DataFrame, n: int = 3, pin: bool = True) -> DataFrame:
 
 
 def minhash_signatures(docs: DataFrame, n: int = 3,
-                       sets: DataFrame | None = None,
-                       pin: bool = True) -> DataFrame:
+                       sets: DataFrame | None = None) -> DataFrame:
     """Per-doc MinHash signature columns m0..m15.
 
     Computed map-side: each permutation min is ``array_min`` over a
@@ -428,9 +428,12 @@ def minhash_signatures(docs: DataFrame, n: int = 3,
     125× fixture volume that row stream is the widest intermediate in
     the whole LSH chain.  The ``size > 0`` filter reproduces explode's
     drop of empty shingle sets (``array_min([]) = NULL`` would
-    otherwise bucket all empty docs together downstream)."""
+    otherwise bucket all empty docs together downstream).
+
+    Sets derived here are read once, so they are never pinned; pass
+    ``sets`` to share a caller's pinned sets instead."""
     if sets is None:
-        sets = _shingle_sets(docs, n, pin=pin)
+        sets = _shingle_sets(docs, n, pin=False)
     hs = F.transform("sh_set", lambda x: x % MINHASH_P)
     mins = [
         F.array_min(
@@ -452,7 +455,7 @@ def minhash_signatures(docs: DataFrame, n: int = 3,
 #: the largest bucket the sf0.1 fixtures produce (20), so the guard
 #: is invisible at fixture scale and only bites genuine skew.  The
 #: oracle-twin registrations pass ``max_bucket=None`` EXPLICITLY
-#: (exact band-join semantics, hash-stable vs DuckDB); use
+#: (exact unguarded bucket semantics, hash-stable vs DuckDB); use
 #: :func:`lsh_hot_buckets` to see what a guarded run would drop.
 LSH_MAX_BUCKET_DEFAULT = 1000
 
@@ -484,10 +487,66 @@ def band_key_structs(components, rows_per_band: int) -> F.Column:
     )
 
 
+def bucket_pairs(rows: DataFrame, member, max_bucket: int | None = None,
+                 side=None) -> DataFrame:
+    """(a, b, n_bands): one row per distinct member pair that shares
+    ≥1 band bucket, with the number of buckets it shares.
+
+    This is the one banded candidate join behind every LSH family
+    (MinHash text, the shard-vs-corpus split, hyperplane embeddings,
+    dHash images): hash-partition the band rows by bucket, collect
+    each bucket's members into arrays with ONE groupBy, and enumerate
+    the bucket's pairs in-task.  The band rows are exchanged and read
+    once; there is no join and nothing to pin.  ``max_bucket`` drops
+    hot buckets before any pair fan-out, as a size filter on the
+    bucket row (their members are near-identical by construction and
+    belong to the exact-dup pass).
+
+    ``rows`` is ``(band_idx, key, …)``.  ``member`` names the id
+    column, or a struct column whose FIRST field is the id; the other
+    fields ride along into ``a``/``b`` so a rescore needs no join back.
+
+    * ``side=None`` (self mode): each bucket's sorted member array
+      emits its C(k,2) pairs with ``id(a) < id(b)``, so a duplicated
+      id never pairs with itself.
+    * ``side=<bool column name>`` (cross mode; true = the
+      indexed/corpus side): ``a`` ranges over the false side and
+      ``b`` over the true side; ``max_bucket`` caps the corpus-side
+      array.
+    """
+    # SQL strings, not Column trees: each F.* call is a Py4J round
+    # trip, and this kernel is built on every LSH query's plan path.
+    cap = "" if max_bucket is None else f" AND size({{}}) <= {int(max_bucket)}"
+    grp = rows.groupBy("band_idx", "key")
+    if side is None:
+        mtype = rows.schema[member].dataType
+        id_field = f".`{mtype.names[0]}`" if isinstance(mtype, StructType) else ""
+        pairs = (
+            grp.agg(F.expr(f"sort_array(collect_list(`{member}`))").alias("ms"))
+            .where("size(ms) > 1" + cap.format("ms"))
+            .selectExpr("posexplode(ms) AS (i, a)", "ms")
+            .selectExpr("a", "explode(slice(ms, i + 2, size(ms))) AS b")
+            .where(f"a{id_field} < b{id_field}")
+        )
+    else:
+        pairs = (
+            grp.agg(
+                F.expr(f"collect_list(CASE WHEN NOT `{side}` THEN `{member}` END)")
+                .alias("ms"),
+                F.expr(f"collect_list(CASE WHEN `{side}` THEN `{member}` END)")
+                .alias("cs"),
+            )
+            .where("size(ms) > 0 AND size(cs) > 0" + cap.format("cs"))
+            .selectExpr("explode(ms) AS a", "cs")
+            .selectExpr("a", "explode(cs) AS b")
+        )
+    return pairs.groupBy("a", "b").agg(F.expr("count(1) AS n_bands"))
+
+
 def _band_rows(docs: DataFrame, n: int, rows_per_band: int,
-               sets: DataFrame | None, pin: bool = True) -> DataFrame:
+               sets: DataFrame | None) -> DataFrame:
     """(doc_id, band_idx, key): one row per doc per LSH band."""
-    sig = minhash_signatures(docs, n, sets=sets, pin=pin)
+    sig = minhash_signatures(docs, n, sets=sets)
     bands = band_key_structs(
         [F.col(f"m{i}") for i in range(len(MINHASH_A))], rows_per_band)
     return sig.select("doc_id", F.explode(bands).alias("b")).select(
@@ -501,10 +560,10 @@ def lsh_hot_buckets(docs: DataFrame, n: int = 3,
                     sets: DataFrame | None = None) -> DataFrame:
     """(band_idx, key, sz): the band buckets the default guard drops.
 
-    The guard inside :func:`minhash_candidates` anti-joins these away
-    silently (the candidate stream must stay lazily composable); this
-    companion surfaces WHAT was dropped and how big each bucket was,
-    so a pipeline can log/alert on guard activity instead of
+    The guard inside :func:`minhash_candidates` filters these buckets
+    out silently (the candidate stream must stay lazily composable);
+    this companion surfaces WHAT was dropped and how big each bucket
+    was, so a pipeline can log/alert on guard activity instead of
     discovering it from a recall dip.
     """
     return (
@@ -519,25 +578,22 @@ def minhash_candidates(docs: DataFrame, n: int = 3,
                        rows_per_band: int = MINHASH_ROWS_PER_BAND,
                        sets: DataFrame | None = None,
                        max_bucket: int | None = LSH_MAX_BUCKET_DEFAULT,
-                       pin: bool = True,
                        bands: DataFrame | None = None,
                        ) -> DataFrame:
     """Candidate near-dup pairs: docs sharing ≥1 LSH band bucket.
 
     Output: (doc_a, doc_b, n_bands) — how many band buckets the pair
-    shares.  ``rows_per_band`` is the recall/precision knob: the
-    candidate probability for a pair with Jaccard s is
-    1 − (1 − s^r)^(16/r), so r=1 catches far more low-similarity
-    pairs than r=2 (probed at sf0.01, threshold 0.05: recall 0.93 vs
-    0.86; at 0.008: 0.17 vs 0.008).
+    shares, ``doc_a < doc_b``.  ``rows_per_band`` is the
+    recall/precision knob: the candidate probability for a pair with
+    Jaccard s is 1 − (1 − s^r)^(16/r), so r=1 catches far more
+    low-similarity pairs than r=2 (probed at sf0.01, threshold 0.05:
+    recall 0.93 vs 0.86; at 0.008: 0.17 vs 0.008).
 
     ``max_bucket`` is the scale skew guard, ON by default (see
     :data:`LSH_MAX_BUCKET_DEFAULT`): buckets larger than it are
-    dropped — their members are by construction extremely similar and
-    are handled by the exact-dup pass; since round 12 the guard is a
-    free size filter on the bucket rows (no second traversal, no
-    anti-join).  Pass ``max_bucket=None`` for exact band-join
-    semantics (the oracle-checked registrations do, knowingly);
+    dropped by :func:`bucket_pairs`'s size filter.  Pass
+    ``max_bucket=None`` for exact unguarded semantics (the
+    oracle-checked registrations do, knowingly);
     :func:`lsh_hot_buckets` reports what a guarded run drops.
 
     ``bands`` (round 12) injects a precomputed band-rows frame
@@ -546,51 +602,15 @@ def minhash_candidates(docs: DataFrame, n: int = 3,
     census (``lsh_near_dup_auto``) does not pay the tokenize+minhash
     pass a second time (VERDICT r11 item 2; guide §5 reuse).
     """
-    exploded = bands if bands is not None else _band_rows(
-        docs, n, rows_per_band, sets, pin=pin)
-    # Bucket-array pair generation (round 12, guide §2.2/§2.4): the
-    # old band self-join computed AND exchanged the band rows twice
-    # (once per join side) and paid a sort-merge sort on both — at
-    # sf0.1 the pair stage alone was ~1.1 s warm of the 2.9 s exact
-    # chain.  Collecting each bucket's members into ONE sorted array
-    # instead exchanges the band rows ONCE, needs no join at all, and
-    # enumerates each bucket's C(k,2) ordered pairs in-task with a
-    # streaming explode (same per-bucket colocation and fan-out the
-    # join had, bit-identical output: measured 157 084/157 084 pairs
-    # equal at sf0.1).  It also makes the hot-bucket guard FREE — a
-    # ``size(ms) <= max_bucket`` filter on the bucket row replaces the
-    # old second band-rows traversal + broadcast anti-join, so the
-    # round-11 guard-pin/recompute trade (pin OOMs the 8 GiB cap at
-    # 3125×; recompute costs a second tokenize pass) disappears: the
-    # band rows are traversed once, guard or no guard (``pin`` is
-    # kept for signature compatibility; nothing needs pinning now).
-    buckets = (
-        exploded.groupBy("band_idx", "key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ms"))
-        .where(F.size("ms") > 1)
-    )
-    if max_bucket is not None:
-        # Drop hot buckets BEFORE pair fan-out — their members are by
-        # construction near-identical and handled by the exact-dup
-        # pass (same drop set as the old anti-join: identical buckets,
-        # identical sizes).
-        buckets = buckets.where(F.size("ms") <= max_bucket)
-    pairs = (
-        buckets
-        .select(F.posexplode("ms").alias("i", "doc_a"), F.col("ms"))
-        .select(
-            "doc_a",
-            F.explode(
-                F.slice("ms", F.col("i") + 2, F.size("ms"))
-            ).alias("doc_b"),
-        )
-    )
-    return pairs.groupBy("doc_a", "doc_b").agg(F.count("*").alias("n_bands"))
+    if bands is None:
+        bands = _band_rows(docs, n, rows_per_band, sets)
+    return bucket_pairs(bands, "doc_id", max_bucket).toDF(
+        "doc_a", "doc_b", "n_bands")
 
 
 def q_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max_bucket=None EXPLICITLY: this registration is the exact
-    # band-join oracle twin (hash-stable vs DuckDB); scale callers get
+    # unguarded oracle twin (hash-stable vs DuckDB); scale callers get
     # the default hot-bucket guard instead.
     return minhash_candidates(table(spark, sf_dir, "documents"),
                               max_bucket=None)
@@ -666,7 +686,8 @@ def lsh_near_dup(docs: DataFrame, n: int = 3,
     LSH candidate pairs — sub-quadratic END TO END:
 
       * candidate generation shuffles O(docs × bands) band-bucket rows
-        and joins bucket-to-bucket (never shingle-to-shingle);
+        once and enumerates pairs inside each bucket
+        (:func:`bucket_pairs`; never shingle-to-shingle);
       * rescoring joins each candidate pair to the two docs' shingle
         SETS (two shuffle joins on doc_id) and computes the exact
         Jaccard with ``array_intersect`` — work is O(candidates), and
@@ -834,8 +855,8 @@ GROUP BY doc_id
 # --------------------------------------------------------------------------
 # INCREMENTAL dedup: the shape every production pipeline actually
 # runs — a new shard arrives and must be deduped AGAINST THE EXISTING
-# CORPUS, not within itself.  The LSH band join is one-sided
-# (incoming buckets ⋈ corpus buckets), so shuffle volume is
+# CORPUS, not within itself.  The LSH candidate step is one-sided
+# (incoming × corpus members of each bucket), so shuffle volume is
 # O((|incoming| + |corpus|) × bands) and pair fan-out is
 # incoming×corpus-bucket-collisions only — never corpus×corpus, which
 # is the term that dwarfs everything at 100 TB (the corpus side can
@@ -855,37 +876,6 @@ def _side_is_corpus(doc_id_col) -> F.Column:
     return bucket < INCR_CORPUS_PCT
 
 
-def _cross_side_bucket_pairs(exploded: DataFrame) -> DataFrame:
-    """(doc_id, match_id) per shared band bucket, from side-tagged
-    band rows (doc_id, band_idx, key, is_corpus) — one row per
-    (incoming, corpus, bucket) collision.
-
-    Bucket-array form of the one-sided band join (round 12, same
-    rewrite as :func:`minhash_candidates`): ONE groupBy collects each
-    bucket's incoming and corpus members into two arrays
-    (``collect_list`` of a ``when`` drops the other side's NULLs) and
-    the incoming×corpus cross is enumerated in-task by two explodes —
-    the old inc⋈cor join exchanged the band rows twice (once per
-    filtered side); this exchanges them once, and buckets with only
-    one side present are dropped before any fan-out."""
-    grp = (
-        exploded.groupBy("band_idx", "key")
-        .agg(
-            F.collect_list(
-                F.when(~F.col("is_corpus"), F.col("doc_id"))
-            ).alias("inc"),
-            F.collect_list(
-                F.when(F.col("is_corpus"), F.col("doc_id"))
-            ).alias("cor"),
-        )
-        .where((F.size("inc") > 0) & (F.size("cor") > 0))
-    )
-    return (
-        grp.select(F.explode("inc").alias("doc_id"), "cor")
-        .select("doc_id", F.explode("cor").alias("match_id"))
-    )
-
-
 def incremental_scored_pairs(docs: DataFrame, n: int = 3,
                              threshold: float = LSH_NEAR_DUP_THRESHOLD,
                              rows_per_band: int = LSH_ROWS_PER_BAND) -> DataFrame:
@@ -893,32 +883,12 @@ def incremental_scored_pairs(docs: DataFrame, n: int = 3,
     above-threshold matches on the corpus side — the cross-side
     candidate set, exactly rescored.  The per-doc report below and
     the streaming twin (streaming/dedup.py) both reduce to this."""
-    r = rows_per_band
     sets = _shingle_sets(docs, n)
-    sig = minhash_signatures(docs, n, sets=sets)
-    n_bands = len(MINHASH_A) // r
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band_idx"),
-                F.concat_ws(
-                    "_", *[F.col(f"m{j * r + k}") for k in range(r)]
-                ).alias("key"),
-            )
-            for j in range(n_bands)
-        ]
+    exploded = _band_rows(docs, n, rows_per_band, sets).withColumn(
+        "is_corpus", _side_is_corpus(F.col("doc_id"))
     )
-    exploded = (
-        sig.select("doc_id", F.explode(bands).alias("b"))
-        .select(
-            "doc_id",
-            F.col("b.band_idx").alias("band_idx"),
-            F.col("b.key").alias("key"),
-            _side_is_corpus(F.col("doc_id")).alias("is_corpus"),
-        )
-    )
-    cand = _cross_side_bucket_pairs(exploded).select(
-        "doc_id", "match_id").distinct()
+    cand = bucket_pairs(exploded, "doc_id", side="is_corpus").select(
+        F.col("a").alias("doc_id"), F.col("b").alias("match_id"))
     a = sets.select(F.col("doc_id"), F.col("sh_set").alias("_sa"))
     b = sets.select(F.col("doc_id").alias("match_id"), F.col("sh_set").alias("_sb"))
     n_common = F.size(F.array_intersect("_sa", "_sb"))
@@ -951,12 +921,12 @@ def incremental_sketch_pairs(docs: DataFrame, n: int = 3,
     `incremental_scored_pairs` joins each cross-side candidate back to
     BOTH shingle-set arrays for the exact rescore — per-candidate
     transport proportional to document size, the same floor the batch
-    sketch path removed (SURVEY §8.12).  Here the cross-side band join
-    IS the scorer: counting matching band buckets per (incoming,
+    sketch path removed (SURVEY §8.12).  Here the cross-side bucket
+    pairing IS the scorer: counting matching band buckets per (incoming,
     corpus) pair gives the MinHash agreement estimate at zero set
     transport, and the shingle sets are never materialized at all
-    (``pin=False`` signatures only).  Work: one one-sided band join —
-    never corpus×corpus — plus a pair-keyed count.
+    (signatures only).  Work: one cross-mode :func:`bucket_pairs` —
+    never corpus×corpus — whose pair count is the score.
 
     ``threshold`` defaults to :data:`SKETCH_THRESHOLD` (the calibrated
     operating point); pass the rescore threshold 0.05 only if a
@@ -966,16 +936,14 @@ def incremental_sketch_pairs(docs: DataFrame, n: int = 3,
         threshold = SKETCH_THRESHOLD
     n_bands_total = len(MINHASH_A) // rows_per_band
     min_bands = max(1, math.ceil(threshold * n_bands_total))
-    exploded = _band_rows(docs, n, rows_per_band, None, pin=False).withColumn(
+    exploded = _band_rows(docs, n, rows_per_band, None).withColumn(
         "is_corpus", _side_is_corpus(F.col("doc_id"))
     )
     return (
-        _cross_side_bucket_pairs(exploded)
-        .groupBy("doc_id", "match_id")
-        .agg(F.count("*").alias("n_bands"))
+        bucket_pairs(exploded, "doc_id", side="is_corpus")
         .filter(F.col("n_bands") >= min_bands)
         .select(
-            "doc_id", "match_id", "n_bands",
+            F.col("a").alias("doc_id"), F.col("b").alias("match_id"), "n_bands",
             F.round(F.col("n_bands") / F.lit(n_bands_total), 6)
             .alias("est_jaccard"),
         )
@@ -1086,7 +1054,7 @@ bands_all AS (
 bands AS ({'''
     SELECT * FROM bands_all''' if max_bucket is None else f'''
     -- hot-bucket guard twin: keep only band buckets of size <=
-    -- max_bucket, exactly like the Spark side's broadcast anti-join
+    -- max_bucket, exactly like the Spark side's bucket size filter
     SELECT b.* FROM bands_all b
     JOIN (SELECT band_idx, key FROM bands_all
           GROUP BY band_idx, key HAVING count(*) <= {max_bucket}) k
@@ -1134,7 +1102,7 @@ SELECT doc_a, doc_b, jaccard FROM pairs
 #: registration would be vacuous in the hash — it would never differ
 #: from the unguarded twin.  4 is the largest cap with hot buckets at
 #: EVERY fixture SF (18 @sf0.001, 19 @sf0.01, 5 627 @sf0.1), so the
-#: broadcast anti-join drop path itself is what gets hash-checked.
+#: guard's drop path itself is what gets hash-checked.
 GUARD_DEMO_BUCKET = 4
 
 
@@ -1174,7 +1142,7 @@ def band_volume_census(docs: DataFrame, n: int = 3,
     Output is tiny (one row per distinct bucket size); two shuffles
     (bucket count, histogram), both on 8-byte keys.
 
-    ``pin=False`` (round 11): the census traverses the shingle sets
+    Unpinned (round 11): the census traverses the shingle sets
     exactly once (signatures → band keys), so pinning them bought
     nothing and cost everything — the ~6 GB of pinned arrays at the
     3125× tier OOM'd the 8 GiB cap for a query whose whole output is
@@ -1182,7 +1150,7 @@ def band_volume_census(docs: DataFrame, n: int = 3,
     cheaper than the capacity it plans.
     """
     sizes = (
-        _band_rows(docs, n, rows_per_band, None, pin=False)
+        _band_rows(docs, n, rows_per_band, None)
         .groupBy("band_idx", "key")
         .agg(F.count("*").alias("sz"))
     )
@@ -1347,7 +1315,7 @@ def lsh_near_dup_sketch(docs: DataFrame, n: int = 3,
     (E[n_bands/16] = J), so the rescore becomes a filter on the
     candidate aggregate — no join back to the sets, no array
     transport, and the shingle sets themselves are traversed once
-    (``pin=False``) and never pinned.
+    and never pinned.
 
     When is the swap safe?  Read `dedup_jaccard_calibration` for the
     corpus first: if the exact Jaccard mass sits where the agreement
@@ -1363,7 +1331,7 @@ def lsh_near_dup_sketch(docs: DataFrame, n: int = 3,
     min_bands = max(1, math.ceil(threshold * n_bands_total))
     cand = minhash_candidates(
         docs, n, rows_per_band=rows_per_band, sets=None,
-        max_bucket=max_bucket, pin=False, bands=bands,
+        max_bucket=max_bucket, bands=bands,
     )
     return (
         cand.filter(F.col("n_bands") >= min_bands)
@@ -1417,7 +1385,7 @@ def q_lsh_near_dup_sketch_guarded(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # nbands over the GUARDED `bands` CTE (lsh_pairs_sql's max_bucket
 # HAVING-filter) — agreement counts see only surviving buckets,
-# mirroring the Spark side's pre-pair-join broadcast anti-join.
+# mirroring the Spark side's bucket size filter before pair fan-out.
 ORACLE_LSH_SKETCH_GUARDED = f"""
 WITH {lsh_pairs_sql(0.0, max_bucket=GUARD_DEMO_BUCKET)},
 nbands AS (
@@ -1698,7 +1666,7 @@ WHERE greatest(round(n_common * 1.0 / na, 6),
 
 # Incremental oracle: the SAME symmetric pairs CTE, restricted to
 # cross-side pairs and re-keyed (incoming doc, corpus match); the
-# Spark side's one-sided band join yields exactly this set because a
+# Spark side's cross-mode bucket_pairs yields exactly this set because a
 # cross-side pair shares a band bucket iff it appears in the
 # symmetric candidate join.
 ORACLE_INCREMENTAL_DEDUP = f"""
@@ -1948,7 +1916,7 @@ QUERIES = [
      "(sub-quadratic; no shingle self-join)."),
     ("dedup_lsh_neardup_guarded", q_lsh_near_dup_guarded,
      ORACLE_LSH_GUARDED,
-     "E2 guard-ON twin (round 8): the hot-bucket broadcast anti-join "
+     "E2 guard-ON twin (round 8): the hot-bucket size filter "
      "REGISTERED AND FIRING (cap 4 so fixture buckets are hot), "
      "oracle-mirrored — the production drop semantics under the hash "
      "gate."),
@@ -1992,12 +1960,12 @@ QUERIES = [
      "ExactSubstr-style cross-doc repeated token-window audit "
      "(rolling-hash windows, no pair join / suffix array)."),
     ("dedup_incremental", q_incremental_dedup, ORACLE_INCREMENTAL_DEDUP,
-     "Incremental shard-vs-corpus dedup: one-sided LSH band join "
+     "Incremental shard-vs-corpus dedup: one-sided LSH bucket pairing "
      "(never corpus x corpus), exact rescore, best-match per incoming "
      "doc, total output."),
     ("dedup_incremental_sketch", q_incremental_sketch_pairs,
      ORACLE_INCREMENTAL_SKETCH,
      "Sketch-mode incremental dedup (round 11): cross-side candidates "
-     "scored by signature agreement from the one-sided band join "
+     "scored by signature agreement from the one-sided bucket pairing "
      "itself — shingle sets never materialized, zero set transport."),
 ]

@@ -28,8 +28,8 @@ from grpc_map_reduce_spark.functions.gif import decode_gif, encode_gif
 from grpc_map_reduce_spark.functions.jpeg import decode_jpeg, encode_jpeg
 from grpc_map_reduce_spark.functions.png import decode_png, encode_png
 from grpc_map_reduce_spark.functions.wav import decode_wav, encode_wav
+from grpc_map_reduce_spark.operators.dedup import bucket_pairs
 from grpc_map_reduce_spark.sources.tables import table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
 
 #: Metadata carried next to every media payload.
 MEDIA_META_DDL = "struct<format:string,width:int,height:int,n_frames:int>"
@@ -1293,9 +1293,10 @@ ORACLE_SPECTROGRAM = _spectrogram_oracle()
 # 4 bands × 14 bits guarantee every pair with Hamming ≤ 3 shares a
 # clean band (pigeonhole); candidates rescore by bit_count(xor).
 #
-# Scale: hashing is map-only over decoded media; the pair join is
-# O(images × 4) band rows bucket-joined — the same sub-quadratic
-# shape as the MinHash text path, never all-pairs.
+# Scale: hashing is map-only over decoded media; candidate pairs come
+# from O(images × 4) band rows grouped by bucket (dedup.bucket_pairs)
+# — the same sub-quadratic shape as the MinHash text path, never
+# all-pairs.
 DHASH_W, DHASH_H = 9, 7
 DHASH_BITS = (DHASH_W - 1) * DHASH_H  # 56
 DHASH_BANDS = 4
@@ -1342,8 +1343,9 @@ def phash_near_dup_pairs(media_df: DataFrame,
     ``max_bucket`` is the hot-bucket skew guard, ON by default (see
     :data:`DHASH_MAX_BUCKET_DEFAULT` for the measured 125x blowup it
     prevents) and mirrored in the oracle's HAVING filter; ``None``
-    restores the exact unguarded band join."""
-    sigs = dhash_images(media_df).localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
+    restores the exact unguarded bucket pairing.  Each band row
+    carries its image's hash in the bucket member, so the Hamming
+    rescore needs no join back to the signatures."""
     bands = F.array(*[
         F.struct(
             F.lit(j).alias("band_idx"),
@@ -1352,44 +1354,17 @@ def phash_near_dup_pairs(media_df: DataFrame,
         )
         for j in range(DHASH_BANDS)
     ])
-    exploded = sigs.select("doc_id", "dhash", F.explode(bands).alias("b")) \
-        .select("doc_id", "dhash", "b.band_idx", "b.key")
-    if max_bucket is not None:
-        exploded = exploded.localCheckpoint(
-            eager=False, storageLevel=PIN_LEVEL
-        )
-        hot = (
-            exploded.groupBy("band_idx", "key")
-            .agg(F.count("*").alias("sz"))
-            .filter(F.col("sz") > max_bucket)
-            .select("band_idx", "key")
-        )
-        exploded = exploded.join(
-            F.broadcast(hot), ["band_idx", "key"], "left_anti"
-        )
-    a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+    rows = dhash_images(media_df).select(
+        F.struct("doc_id", "dhash").alias("m"), F.inline(bands))
+    hamming = F.bit_count(F.col("a.dhash").bitwiseXOR(F.col("b.dhash")))
+    return (
+        bucket_pairs(rows, "m", max_bucket)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            F.col("a.dhash").alias("ha"),
-            F.col("b.dhash").alias("hb"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn(
-            "hamming",
-            F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("long"),
+            hamming.cast("long").alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
     )
 
 
@@ -1403,7 +1378,7 @@ def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The oracle rebuilds the 9×7 thumbnail from text with the resize
 # floor mapping (as ORACLE_PNG_RESIZE), derives the 56-bit hash from
-# character-code comparisons, and replays the band join + Hamming
+# character-code comparisons, and replays the band buckets + Hamming
 # rescore — DuckDB never decodes a PNG.
 _DHASH_SQL_BANDS = "\n        UNION ALL ".join(
     f"SELECT doc_id, dhash, {j} AS band_idx, "
@@ -1443,7 +1418,7 @@ bands_all AS (
 bands AS (
     -- hot-bucket guard twin: keep only band buckets of size <=
     -- DHASH_MAX_BUCKET_DEFAULT, exactly like the Spark side's
-    -- broadcast anti-join (no fixture bucket is hot, but the oracle
+    -- bucket size filter (no fixture bucket is hot, but the oracle
     -- must be an exact twin under ANY data)
     SELECT b.* FROM bands_all b
     JOIN (SELECT band_idx, key FROM bands_all

@@ -140,8 +140,6 @@ def streaming_incremental_dedup(doc_stream: DataFrame, buckets: DataFrame,
     at-least-once per pair and downstream consumers must dedup (or
     upsert) on (doc_id, match_id) if they need exactly-once pairs
     (ADVICE r8)."""
-    r = rows_per_band
-    n_bands = len(MINHASH_A) // r
     if ts_col is not None:
         doc_stream = doc_stream.withWatermark(ts_col, dedup_within)
     ts_cols = [ts_col] if ts_col is not None else []
@@ -151,18 +149,9 @@ def streaming_incremental_dedup(doc_stream: DataFrame, buckets: DataFrame,
         )
         .filter(F.size("ms.sh_set") > 0)
     )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band_idx"),
-                F.concat_ws(
-                    "_",
-                    *[F.element_at("ms.sigs", j * r + k + 1) for k in range(r)],
-                ).alias("key"),
-            )
-            for j in range(n_bands)
-        ]
-    )
+    bands = band_key_structs(
+        [F.element_at("ms.sigs", i + 1) for i in range(len(MINHASH_A))],
+        rows_per_band)
     exp = enriched.select(
         "doc_id", *ts_cols, F.col("ms.sh_set").alias("_sa"),
         F.explode(bands).alias("b")
@@ -225,7 +214,7 @@ def corpus_sketch_index(docs: DataFrame, n: int = 3,
     frame whose pin was the 3125× OOM — at real scale both live as
     bucketed parquet, exactly like the exact twin's index."""
     corpus = docs.filter(_side_is_corpus(F.col("doc_id")))
-    sig = minhash_signatures(corpus, n, pin=False).localCheckpoint(
+    sig = minhash_signatures(corpus, n).localCheckpoint(
         eager=False, storageLevel=PIN_LEVEL)
     bands = band_key_structs(
         [F.col(f"m{i}") for i in range(len(MINHASH_A))], rows_per_band)

@@ -451,6 +451,24 @@ def test_sketch_rescore_has_zero_array_transport(spark, sf_dir):
     assert len(_re.findall(r"\(\d+\) Exchange", plan)) <= 1, plan
 
 
+def test_banded_candidates_plan_without_band_join(spark, sf_dir):
+    """Every banded LSH family enumerates candidate pairs inside each
+    bucket's member arrays (dedup.bucket_pairs): no join node may be
+    keyed on band_idx, the hot-bucket guard is a size filter (no
+    LeftAnti join), and the dHash path joins nothing at all — its
+    bucket members carry the hash, and nothing is pinned."""
+    join_re = r"\(\d+\) (?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)"
+    for name in ("embedding_lsh_recall_stress", "embedding_lsh_selective",
+                 "embedding_incremental_neardup", "multimodal_phash_pairs"):
+        plan = _plan(spark, sf_dir, name)
+        keys = re.findall(join_re + r"\nLeft keys \[\d+\]: \[([^\]]*)\]", plan)
+        assert not [k for k in keys if "band_idx" in k], (name, plan)
+        assert "LeftAnti" not in plan, (name, plan)
+    # the loop ends on multimodal_phash_pairs
+    assert not re.findall(join_re, plan), plan
+    assert "Scan ExistingRDD" not in plan, plan
+
+
 def test_filtered_ann_pushes_label_predicate(spark, sf_dir):
     plan = _plan(spark, sf_dir, "ann_filtered_topk")
     # the metadata predicate must reach the parquet corpus scan —

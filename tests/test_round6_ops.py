@@ -55,6 +55,12 @@ def test_minhash_explicit_none_keeps_hot_bucket(spark):
     # clones exceed, then show None disables it
     assert minhash_candidates(docs, max_bucket=3).count() == 0
     assert minhash_candidates(docs, max_bucket=None).count() == 10  # C(5,2)
+    # dirty input: every doc_id twice — still C(5,2) pairs, and a
+    # duplicated id never pairs with itself
+    dup = docs.unionAll(docs)
+    got = {(r.doc_a, r.doc_b)
+           for r in minhash_candidates(dup, max_bucket=None).collect()}
+    assert got == {(a, b) for a in range(5) for b in range(a + 1, 5)}
 
 
 def test_lsh_hot_buckets_surfaces_dropped_buckets(spark):
@@ -117,6 +123,28 @@ def test_embedding_lsh_guard_default_and_explicit_none(spark):
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     assert embedding_lsh_candidates(vecs, max_bucket=3).count() == 0
     assert embedding_lsh_candidates(vecs, max_bucket=None).count() == 10
+    dup = vecs.unionAll(vecs)  # dirty input: every vec_id twice
+    got = {(r.id_a, r.id_b)
+           for r in embedding_lsh_candidates(dup, max_bucket=None).collect()}
+    assert got == {(a, b) for a in range(5) for b in range(a + 1, 5)}
+
+
+def test_phash_guard_and_duplicate_ids(spark):
+    """dHash path: same guard contract as the MinHash path, and a
+    duplicated doc_id never pairs with itself."""
+    from grpc_map_reduce_spark.operators.multimodal import (
+        attach_png_media,
+        phash_near_dup_pairs,
+    )
+
+    rows = [(i, "x" * 300) for i in range(5)]  # identical pixels
+    media = attach_png_media(
+        spark.createDataFrame(rows, "doc_id long, text string"))
+    assert phash_near_dup_pairs(media, max_bucket=3).count() == 0
+    assert phash_near_dup_pairs(media, max_bucket=None).count() == 10
+    got = {(r.doc_a, r.doc_b, r.hamming)
+           for r in phash_near_dup_pairs(media.unionAll(media)).collect()}
+    assert got == {(a, b, 0) for a in range(5) for b in range(a + 1, 5)}
 
 
 def test_reliable_checkpoint_dir_knob(spark, tmp_path):
