@@ -20,22 +20,34 @@ from grpc_map_reduce_spark.sources.tables import table
 from grpc_map_reduce_spark.plans.checkpoint import iter_checkpoint
 
 
+def _unit(series):
+    """float64 matrix of a pandas Series of vectors, each row scaled
+    to unit L2 norm — the one upcast-and-normalize step of every numpy
+    kernel in this module (float32 rows upcast exactly)."""
+    import numpy as np
+
+    mat = np.array(series.tolist(), dtype=np.float64)
+    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    return mat
+
+
 def _pack_blocks(df: DataFrame, id_col: str, vec_col: str,
                  n_blocks: int, keys: tuple = (),
-                 keys_schema: str = "") -> DataFrame:
+                 unit: bool = True) -> DataFrame:
     """Hash rows into ``n_blocks`` blocks and pack each block into one
     ``(*keys, blk, ids, mat)`` summary row: ids int64 array + the
-    block's L2-normalized float64 matrix as bytes.  The shared
-    building block of the vectorized similarity kernels below — joins
-    then replicate whole-block summaries (O(n·B) bytes) instead of
-    per-pair rows.  ``keys`` adds grouping columns (e.g. a metadata
-    partition), turning the pack into a per-group index."""
+    block's float64 matrix as bytes, L2-normalized unless ``unit`` is
+    false.  The shared building block of the vectorized similarity
+    kernels below — joins then replicate whole-block summaries
+    (O(n·B) bytes) instead of per-pair rows.  ``keys`` adds grouping
+    columns (a metadata partition, an IVF list), turning the pack into
+    a per-group index; their types come from ``df``'s schema."""
     import numpy as np
     import pandas as pd
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.array(pdf["v"].tolist(), dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+        mat = (_unit(pdf["v"]) if unit
+               else np.array(pdf["v"].tolist(), dtype=np.float64))
         row = {k: [pdf[k].iloc[0]] for k in keys}
         row.update(
             {"blk": [int(pdf["blk"].iloc[0])],
@@ -50,14 +62,16 @@ def _pack_blocks(df: DataFrame, id_col: str, vec_col: str,
         F.col(vec_col).alias("v"),  # float32 stays JVM-side; numpy upcasts exactly
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("blk"),
     )
-    prefix = (keys_schema + ", ") if keys_schema else ""
+    prefix = "".join(
+        f"{k} {base.schema[k].dataType.simpleString()}, " for k in keys)
     return base.groupBy(*keys, "blk").applyInPandas(
         _pack, schema=f"{prefix}blk long, ids array<long>, mat binary"
     )
 
 
 def _block_topk_kernel(k: int):
-    """mapInPandas kernel shared by the top-k searches: per packed
+    """The mapInPandas kernel of :func:`_blocked_topk`, which every
+    top-k search runs: per packed
     (corpus block × query block) row, one numpy matmul then a
     block-local top-k per query by (-sim, neighbor_id) — the global
     top-k is contained in the union of block winners."""
@@ -90,38 +104,50 @@ def _block_topk_kernel(k: int):
     return _block_topk
 
 
-def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                n_blocks: int = 16) -> DataFrame:
-    """For each query vector, the top-``k`` most-similar corpus rows.
-
-    Output: ``(query_id, neighbor_id, sim, rank)`` with ``sim`` rounded
-    to 6 dp and rank tie-broken by neighbor id, so results are
-    deterministic and engine-portable.
-
-    Plan: pack the (small) query set into one summary row and the
-    corpus into ``n_blocks`` blocks; the broadcast cross join ships
-    the queries to every corpus block; one numpy matmul per block
-    yields a block-local top-k per query (sorted by (-sim, id), so the
-    global top-k is contained in the union); a final k-row-per-query
-    window rank over B·k·|Q| candidate rows finishes.  The corpus is
-    never shuffled and no pair rows are materialized."""
-    import numpy as np
-    import pandas as pd
-
-    qpacked = _pack_blocks(queries, id_col, vec_col, 1).select(
-        F.col("ids").alias("q_ids"), F.col("mat").alias("q_mat")
+def _blocked_topk(cpacked: DataFrame, qpacked: DataFrame, k: int,
+                  on: str | None = None) -> DataFrame:
+    """(query_id, neighbor_id, sim, rank): the top-``k`` search over
+    :func:`_pack_blocks` summaries.  The packed queries are broadcast
+    and joined to every corpus block — on the key column ``on`` when
+    given (a metadata group, an IVF list), else as a cross join — so
+    the corpus is never shuffled and no pair rows are materialized.
+    :func:`_block_topk_kernel` keeps a block-local top-k per query
+    (the global top-k is contained in their union) and one window rank
+    over the B·k·|Q| candidate rows finishes, ties broken by neighbor
+    id."""
+    qp = qpacked.select(
+        *([on] if on else []),
+        F.col("ids").alias("q_ids"), F.col("mat").alias("q_mat"),
     )
-    cpacked = _pack_blocks(corpus, id_col, vec_col, n_blocks)
-    joined = cpacked.join(F.broadcast(qpacked))
-
-    cand = joined.mapInPandas(
+    cand = cpacked.join(F.broadcast(qp), on).mapInPandas(
         _block_topk_kernel(k), schema="query_id long, neighbor_id long, sim double"
     )
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
+    )
+
+
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
+                id_col: str = "vec_id", vec_col: str = "embedding",
+                n_blocks: int = 16, group_col: str | None = None) -> DataFrame:
+    """For each query vector, the top-``k`` most-similar corpus rows —
+    within the query's own ``group_col`` partition when one is given.
+
+    Output: ``(query_id, neighbor_id, sim, rank)`` with ``sim`` rounded
+    to 6 dp and rank tie-broken by neighbor id, so results are
+    deterministic and engine-portable.
+
+    Plan: pack the (small) query set into one summary row (per group)
+    and the corpus into ``n_blocks`` blocks (per group), then
+    :func:`_blocked_topk`: the queries are broadcast to every corpus
+    block and one numpy matmul per block pair does the scoring."""
+    keys = (group_col,) if group_col else ()
+    return _blocked_topk(
+        _pack_blocks(corpus, id_col, vec_col, n_blocks, keys),
+        _pack_blocks(queries, id_col, vec_col, 1, keys),
+        k, on=group_col,
     )
 
 
@@ -319,6 +345,23 @@ def hyperplanes(seed: int, n_bits: int, dim: int):
 EMB_LSH_MAX_BUCKET_DEFAULT = 1000
 
 
+def hyperplane_band_keys(V, H, rows_per_band: int):
+    """(n, n_bits / rows_per_band) int64 band keys of the rows of
+    ``V`` against the hyperplane matrix ``H`` (see :func:`hyperplanes`
+    — hash-derived, so identical in every task, run and the DuckDB
+    oracle): the sign bits of ``V @ H.T`` (norm-invariant), each run of
+    ``rows_per_band`` bits read as one little-endian integer.  THE
+    embedding band-key format: the batch :func:`_emb_band_keys` and
+    the streaming ``emb_band_keys_udf`` both call it, so stream and
+    batch buckets cannot drift apart."""
+    import numpy as np
+
+    r = rows_per_band
+    bits = (V @ H.T) >= 0
+    weights = 1 << np.arange(r, dtype=np.int64)
+    return bits.reshape(len(V), -1, r).astype(np.int64) @ weights
+
+
 def _emb_band_keys(df: DataFrame, n_bits: int, rows_per_band: int,
                    seed: int, id_col: str, vec_col: str) -> DataFrame:
     """(id, band_idx, key) hyperplane-LSH band rows for every vector.
@@ -329,10 +372,8 @@ def _emb_band_keys(df: DataFrame, n_bits: int, rows_per_band: int,
     import numpy as np
     import pandas as pd
 
-    r = rows_per_band
-    assert n_bits % r == 0, "rows_per_band must divide n_bits"
-    n_bands = n_bits // r
-    weights = (1 << np.arange(r, dtype=np.int64))
+    assert n_bits % rows_per_band == 0, "rows_per_band must divide n_bits"
+    n_bands = n_bits // rows_per_band
 
     def _bands(batches):
         H = None
@@ -341,11 +382,8 @@ def _emb_band_keys(df: DataFrame, n_bits: int, rows_per_band: int,
                 continue
             V = np.array(pdf["v"].tolist(), dtype=np.float64)
             if H is None:
-                # Hash-derived → identical hyperplanes in every
-                # task/run AND in the DuckDB oracle.
                 H = hyperplanes(seed, n_bits, V.shape[1])
-            bits = (V @ H.T) >= 0  # sign bits; norm-invariant
-            keys = bits.reshape(len(V), n_bands, r).astype(np.int64) @ weights
+            keys = hyperplane_band_keys(V, H, rows_per_band)
             yield pd.DataFrame({
                 "id": np.repeat(pdf["id"].to_numpy(np.int64), n_bands),
                 "band_idx": np.tile(np.arange(n_bands, dtype=np.int64), len(V)),
@@ -380,6 +418,16 @@ def embedding_lsh_candidates(corpus: DataFrame, n_bits: int = EMB_LSH_BITS,
         "id_a", "id_b", "n_bands")
 
 
+def cosine_rows(va, vb):
+    """Row-wise exact cosine of two equal-length pandas Series of
+    vectors, rounded to 6 dp — the one numpy core of the batch
+    :func:`_cosine_rescore` and the streaming ``cosine_sim_udf``, so
+    stream and batch sims are bit-equal."""
+    import numpy as np
+
+    return np.round(np.einsum("ij,ij->i", _unit(va), _unit(vb)), 6)
+
+
 def _cosine_rescore(pairs: DataFrame, a: str, b: str,
                     threshold: float) -> DataFrame:
     """(a, b, sim) for the rows of ``pairs`` (a, b, _va, _vb) whose
@@ -392,11 +440,7 @@ def _cosine_rescore(pairs: DataFrame, a: str, b: str,
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = np.array(pdf["_va"].tolist(), dtype=np.float64)
-            B = np.array(pdf["_vb"].tolist(), dtype=np.float64)
-            A /= np.linalg.norm(A, axis=1, keepdims=True)
-            B /= np.linalg.norm(B, axis=1, keepdims=True)
-            sim = np.round(np.einsum("ij,ij->i", A, B), 6)
+            sim = cosine_rows(pdf["_va"], pdf["_vb"])
             keep = sim >= threshold
             yield pd.DataFrame({
                 a: pdf[a].to_numpy(np.int64)[keep],
@@ -982,8 +1026,10 @@ LEFT JOIN best b ON b.vec_id = t.vec_id
 
 # --------------------------------------------------------------------------
 def _model_broadcast(cent: DataFrame):
-    """Collect the one-row centroid summary and ship it as a REAL
-    Spark broadcast (torrent, once per executor).
+    """Collect the one-row centroid summary and ship its (k, d)
+    float64 matrix as a REAL Spark broadcast (torrent, once per
+    executor); ``None`` when the summary is empty (an empty corpus has
+    no seeds).
 
     The previous idiom — ``corpus.join(F.broadcast(cent))`` before
     ``mapInPandas`` — duplicates the k×d float64 matrix onto EVERY
@@ -992,48 +1038,79 @@ def _model_broadcast(cent: DataFrame):
     (the 125× probe measured semdedup at 101 s with K=488 ⇒ 250 KB/row
     — the model copy dwarfed the math).  The collect here is the
     MODEL, k×d doubles — the same bounded driver-scalar class as the
-    BPE merge table (vocab.py), not corpus data.
-
-    Returns ``(k, broadcast)`` where ``broadcast.value`` is the raw
-    float64 centroid bytes — or ``(0, None)`` when the corpus (and so
-    the seed pack) is empty, so callers can short-circuit to an empty
-    result instead of crashing (the retired join formulation silently
-    produced an empty result on an empty corpus; a pipeline that
-    filters everything out must keep that behavior).
+    BPE merge table (vocab.py), not corpus data.  Each operator
+    collects its final model once and hands the result to every
+    :func:`_nearest_lists` call.
     """
+    import numpy as np
+
     row = cent.first()
     if row is None:
-        return 0, None
-    k = len(row["cent_ids"])
-    bc = cent.sparkSession.sparkContext.broadcast(bytes(row["cent_mat"]))
-    return k, bc
+        return None
+    C = np.frombuffer(row["cent_mat"], dtype=np.float64)
+    return cent.sparkSession.sparkContext.broadcast(
+        C.reshape(len(row["cent_ids"]), -1))
+
+
+def _nearest_lists(base: DataFrame, model, n: int = 1,
+                   with_vec: bool = False) -> DataFrame:
+    """``(id, list_id[, v])``: for every ``(id, v)`` row of ``base``,
+    its ``n`` nearest centroids of ``model`` (a :func:`_model_broadcast`
+    result) by cosine, one row per (id, list) — a stable argsort of
+    the broadcast matmul, so ties go to the lower centroid id and
+    ``n=1`` is the argmax.  Map-only: the corpus is never shuffled.
+    ``with_vec`` carries the input vector through unchanged.  An empty
+    model (empty corpus) yields an empty frame of the same schema."""
+    import numpy as np
+    import pandas as pd
+
+    schema = "id long, list_id long"
+    if with_vec:
+        schema += f", v {base.schema['v'].dataType.simpleString()}"
+    if model is None:
+        return base.sparkSession.createDataFrame([], schema)
+
+    def _assign(batches):
+        C = model.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            order = np.argsort(-(_unit(pdf["v"]) @ C.T), axis=1, kind="stable")
+            out = {"id": np.repeat(pdf["id"].to_numpy(np.int64), n),
+                   "list_id": order[:, :n].ravel().astype(np.int64)}
+            if with_vec:
+                out["v"] = np.repeat(pdf["v"].to_numpy(), n)
+            yield pd.DataFrame(out)
+
+    return base.mapInPandas(_assign, schema=schema)
 
 
 def _lloyd_refine(base: DataFrame, cent: DataFrame, n_iter: int) -> DataFrame:
     """``n_iter`` rounds of Lloyd's k-means on the spherical centroids.
 
     Each round is one map pass over the corpus (broadcast-assign +
-    per-partition partial sums — the classic map-side combine) and one
-    tiny all-to-one aggregation of O(lists × partitions) partial rows;
-    the corpus is never shuffled and only the k×d MODEL reaches the
-    driver (see :func:`_model_broadcast`).  Deterministic: partials
-    carry their partition id and the combiner sums in (list_id, pid)
-    order, so the float accumulation order is fixed across runs.
-    Empty lists keep their previous centroid.
+    per-partition partial sums — the classic map-side combine, so the
+    argmax stays fused with the sums here rather than going through
+    :func:`_nearest_lists`) and one tiny all-to-one aggregation of
+    O(lists × partitions) partial rows; the corpus is never shuffled
+    and only the k×d MODEL reaches the driver (see
+    :func:`_model_broadcast`).  Deterministic: partials carry their
+    partition id and the combiner sums in (list_id, pid) order, so the
+    float accumulation order is fixed across runs.  Empty lists keep
+    their previous centroid; an empty seed summary is returned as is.
     """
     import numpy as np
     import pandas as pd
     from pyspark import TaskContext
 
-    def _make_partial(bc, k):
+    def _make_partial(model):
         def _partial(batches):
-            C = np.frombuffer(bc.value, dtype=np.float64).reshape(k, -1)
+            C = model.value
             sums: dict[int, tuple[int, np.ndarray]] = {}
             for pdf in batches:
                 if not len(pdf):
                     continue
-                V = np.array(pdf["v"].tolist(), dtype=np.float64)
-                V /= np.linalg.norm(V, axis=1, keepdims=True)
+                V = _unit(pdf["v"])
                 assign = np.argmax(V @ C.T, axis=1)
                 for li in np.unique(assign):
                     m = assign == li
@@ -1050,9 +1127,9 @@ def _lloyd_refine(base: DataFrame, cent: DataFrame, n_iter: int) -> DataFrame:
             })
         return _partial
 
-    def _make_combine(bc, k):
+    def _make_combine(model):
         def _combine(pdf: pd.DataFrame) -> pd.DataFrame:
-            C = np.frombuffer(bc.value, dtype=np.float64).reshape(k, -1).copy()
+            C = model.value.copy()
             pdf = pdf.sort_values(["list_id", "pid"])
             for li, grp in pdf.groupby("list_id"):
                 total = np.zeros(C.shape[1])
@@ -1068,11 +1145,11 @@ def _lloyd_refine(base: DataFrame, cent: DataFrame, n_iter: int) -> DataFrame:
         return _combine
 
     for _ in range(n_iter):
-        k, bc = _model_broadcast(cent)
-        if k == 0:  # empty corpus → empty seed pack: nothing to refine
+        model = _model_broadcast(cent)
+        if model is None:
             return cent
         partials = base.mapInPandas(
-            _make_partial(bc, k),
+            _make_partial(model),
             schema="pid long, list_id long, cnt long, s array<double>",
         )
 
@@ -1080,7 +1157,7 @@ def _lloyd_refine(base: DataFrame, cent: DataFrame, n_iter: int) -> DataFrame:
             partials
             .withColumn("g", F.lit(0))
             .groupBy("g")
-            .applyInPandas(_make_combine(bc, k),
+            .applyInPandas(_make_combine(model),
                            schema="cent_ids array<long>, cent_mat binary"),
             eager=False,
         )
@@ -1093,123 +1170,36 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     """Approximate top-k via an IVF (inverted-file) index — the scale
     path for :func:`cosine_topk`.
 
-    Index build: seed centroids are the ``n_lists`` lowest-id corpus
-    vectors, L2-normalized (deterministic), refined by
-    ``kmeans_iters`` rounds of spherical Lloyd iteration
-    (:func:`_lloyd_refine` — one broadcast-assign map pass + one tiny
-    partial-sum combine per round).  Every corpus vector is then
-    assigned to its nearest centroid's list by one broadcast numpy
-    matmul (map-only — no shuffle of the corpus).
+    Index build: :func:`_fit_centroids` seeds ``n_lists`` centroids
+    from the lowest-id corpus vectors and refines them with
+    ``kmeans_iters`` spherical Lloyd rounds; the model is collected
+    once (:func:`_model_broadcast`).  :func:`_nearest_lists` assigns
+    every corpus vector to its nearest centroid's list (map-only — no
+    shuffle of the corpus) and each list is packed by
+    :func:`_pack_blocks` keyed on ``list_id``.
 
-    Search: each query probes its ``n_probe`` nearest centroids and
-    brute-forces only those lists — the scan fraction is ~n_probe /
-    n_lists of the corpus, which is the entire point at 10⁹ vectors.
-    Results are exact sims over an approximate candidate set, so
-    recall < 1 is possible; tests assert recall vs the exact operator
-    and that a full probe reproduces it exactly.
+    Search: each query probes its ``n_probe`` nearest centroids; the
+    (query, list) probe rows are packed per list the same way and
+    :func:`_blocked_topk` joins them to the corpus lists on
+    ``list_id``, so each query brute-forces only its probed lists — the
+    scan fraction is ~n_probe / n_lists of the corpus, which is the
+    entire point at 10⁹ vectors.  Results are exact sims over an
+    approximate candidate set, so recall < 1 is possible; tests assert
+    recall vs the exact operator and that a full probe reproduces it
+    exactly.
     """
-    import numpy as np
-    import pandas as pd
+    def base(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v"))
 
-    cent = _pack_blocks(
-        corpus.orderBy(id_col).limit(n_lists), id_col, vec_col, 1
-    ).select(F.col("ids").alias("cent_ids"), F.col("mat").alias("cent_mat"))
+    model = _model_broadcast(_fit_centroids(base(corpus), n_lists, kmeans_iters))
 
-    base = corpus.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).alias("v"),  # float32 stays JVM-side; numpy upcasts exactly
-    )
-    if kmeans_iters > 0:
-        cent = _lloyd_refine(base, cent, kmeans_iters)
+    def packed_lists(df: DataFrame, n: int) -> DataFrame:
+        return _pack_blocks(_nearest_lists(base(df), model, n, with_vec=True),
+                            "id", "v", 1, keys=("list_id",))
 
-    n_cent, cent_bc = _model_broadcast(cent)
-    if n_cent == 0:  # empty corpus: no lists, no results
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, sim double, rank long")
-
-    def _assign(batches):
-        # closure state: the centroid MODEL arrives via sc.broadcast
-        # (once per executor), never duplicated onto corpus rows
-        C = np.frombuffer(cent_bc.value, dtype=np.float64).reshape(n_cent, -1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            V /= np.linalg.norm(V, axis=1, keepdims=True)
-            lists = np.argsort(-(V @ C.T), axis=1, kind="stable")
-            yield pd.DataFrame({
-                "id": pdf["id"],
-                "v": [row for row in V],
-                "list_id": lists[:, 0].astype(np.int64),
-            })
-
-    assigned = base.mapInPandas(
-        _assign, schema="id long, v array<double>, list_id long"
-    )
-
-    # Pack each IVF list (same summary-row layout as _pack_blocks).
-    def _pack_list(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.array(pdf["v"].tolist(), dtype=np.float64)  # already unit
-        return pd.DataFrame(
-            {"list_id": [int(pdf["list_id"].iloc[0])],
-             "ids": [pdf["id"].to_numpy(np.int64)],
-             "mat": [mat.tobytes()]}
-        )
-
-    lists_packed = assigned.groupBy("list_id").applyInPandas(
-        _pack_list, schema="list_id long, ids array<long>, mat binary"
-    )
-
-    # Queries → (query row, probed list_id) pairs, then join to lists.
-    def _probe(batches):
-        C = np.frombuffer(cent_bc.value, dtype=np.float64).reshape(n_cent, -1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            V /= np.linalg.norm(V, axis=1, keepdims=True)
-            order = np.argsort(-(V @ C.T), axis=1, kind="stable")[:, :n_probe]
-            yield pd.DataFrame({
-                "query_id": np.repeat(pdf["id"].to_numpy(np.int64), n_probe),
-                "qv": [v for v in V for _ in range(n_probe)],
-                "list_id": order.ravel().astype(np.int64),
-            })
-
-    qbase = queries.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).alias("v"),  # float32 stays JVM-side; numpy upcasts exactly
-    )
-    probes = qbase.mapInPandas(
-        _probe, schema="query_id long, qv array<double>, list_id long"
-    )
-
-    def _search(batches):
-        for pdf in batches:
-            frames = []
-            for _, row in pdf.iterrows():
-                c_ids = np.asarray(row["ids"], dtype=np.int64)
-                C = np.frombuffer(row["mat"], dtype=np.float64).reshape(len(c_ids), -1)
-                qv = np.asarray(row["qv"], dtype=np.float64)
-                sims = np.round(C @ qv, 6)
-                keep = c_ids != row["query_id"]
-                frames.append(pd.DataFrame({
-                    "query_id": row["query_id"],
-                    "neighbor_id": c_ids[keep],
-                    "sim": sims[keep],
-                }))
-            yield (pd.concat(frames) if frames
-                   else pd.DataFrame({"query_id": [], "neighbor_id": [], "sim": []}))
-
-    # NOT broadcast: lists_packed carries the whole corpus; the join
-    # shuffles only the (small) probe side to the lists' partitions.
-    cand = probes.join(lists_packed, "list_id").mapInPandas(
-        _search, schema="query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _blocked_topk(packed_lists(corpus, 1), packed_lists(queries, n_probe),
+                         k, on="list_id")
 
 
 #: Probe width for the registered IVF query (and its oracle).
@@ -1338,9 +1328,9 @@ WHERE vec_id < 100
 # deterministic end-to-end: seeds are the k lowest-id vectors packed
 # in sorted-id order (groupBy/applyInPandas row order is not
 # contractual, so the packer sorts explicitly), refinement is
-# :func:`_lloyd_refine` (fixed float accumulation order), and numpy
-# ``argmax`` tie-breaks to the lowest cluster id exactly like the
-# oracle's ``ORDER BY sim DESC, cid``.
+# :func:`_lloyd_refine` (fixed float accumulation order), and
+# :func:`_nearest_lists` tie-breaks to the lowest cluster id exactly
+# like the oracle's ``ORDER BY sim DESC, cid``.
 #
 # Scale: per round, one broadcast-assign map pass over the corpus +
 # one tiny partial-sum combine — the corpus is NEVER shuffled; the
@@ -1361,11 +1351,9 @@ def _fit_centroids(base: DataFrame, k: int, n_iter: int) -> DataFrame:
 
     def _pack_seeds(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("id")
-        mat = np.array(pdf["v"].tolist(), dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
         return pd.DataFrame({
             "cent_ids": [np.arange(len(pdf), dtype=np.int64)],
-            "cent_mat": [mat.tobytes()],
+            "cent_mat": [_unit(pdf["v"]).tobytes()],
         })
 
     cent = (
@@ -1382,34 +1370,12 @@ def embedding_kmeans(corpus: DataFrame, k: int = KMEANS_K,
                      vec_col: str = "embedding") -> DataFrame:
     """(vec_id, cluster, cluster_size) after ``n_iter`` spherical
     Lloyd rounds from the ``k`` lowest-id seed vectors."""
-    import numpy as np
-    import pandas as pd
-
     base = corpus.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).alias("v"),  # float32 stays JVM-side; numpy upcasts exactly
     )
-    cent = _fit_centroids(base, k, n_iter)
-    n_cent, cent_bc = _model_broadcast(cent)
-    if n_cent == 0:  # empty corpus: nothing to assign
-        return corpus.sparkSession.createDataFrame(
-            [], "vec_id long, cluster long, cluster_size long")
-
-    def _assign(batches):
-        C = np.frombuffer(cent_bc.value, dtype=np.float64).reshape(n_cent, -1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            V /= np.linalg.norm(V, axis=1, keepdims=True)
-            yield pd.DataFrame({
-                "vec_id": pdf["id"],
-                "cluster": np.argmax(V @ C.T, axis=1).astype(np.int64),
-            })
-
-    assigned = base.mapInPandas(
-        _assign, schema="vec_id long, cluster long"
-    )
+    model = _model_broadcast(_fit_centroids(base, k, n_iter))
+    assigned = _nearest_lists(base, model).toDF("vec_id", "cluster")
     w = Window.partitionBy("cluster")
     return assigned.select(
         "vec_id", "cluster", F.count("*").over(w).alias("cluster_size")
@@ -1657,35 +1623,11 @@ def semdedup(corpus: DataFrame, threshold: float = SEMDEDUP_THRESHOLD,
     )
     if k is None:
         k = semdedup_auto_k(base.count())
-    cent = _fit_centroids(base, k, n_iter)
-    n_cent, cent_bc = _model_broadcast(cent)
-    if n_cent == 0:  # empty corpus: nothing to dedup
-        return corpus.sparkSession.createDataFrame(
-            [], "vec_id long, cluster long, n_prior_dups long, "
-                "keep boolean, max_prior_sim double")
-
-    def _assign_nv(batches):
-        C = np.frombuffer(cent_bc.value, dtype=np.float64).reshape(n_cent, -1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            V /= np.linalg.norm(V, axis=1, keepdims=True)
-            yield pd.DataFrame({
-                "vec_id": pdf["id"],
-                "cluster": np.argmax(V @ C.T, axis=1).astype(np.int64),
-                # carry the normalized vector so the per-cluster kernel
-                # never re-reads the corpus
-                "nv": list(V),
-            })
-
-    clustered = base.mapInPandas(
-        _assign_nv, schema="vec_id long, cluster long, nv array<double>"
-    )
+    model = _model_broadcast(_fit_centroids(base, k, n_iter))
 
     def _cluster_dedup(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id")
-        V = np.array(pdf["nv"].tolist(), dtype=np.float64)
+        pdf = pdf.sort_values("id")
+        V = _unit(pdf["v"])
         m = len(pdf)
         sims = np.round(V @ V.T, 6)
         prior = np.tril(np.ones((m, m), dtype=bool), -1)  # j < i by id order
@@ -1693,14 +1635,15 @@ def semdedup(corpus: DataFrame, threshold: float = SEMDEDUP_THRESHOLD,
         mx = masked.max(axis=1)
         nd = (masked >= threshold).sum(axis=1)
         return pd.DataFrame({
-            "vec_id": pdf["vec_id"].to_numpy(),
-            "cluster": pdf["cluster"].to_numpy(),
+            "vec_id": pdf["id"].to_numpy(),
+            "cluster": pdf["list_id"].to_numpy(),
             "n_prior_dups": nd.astype(np.int64),
             "keep": nd == 0,
             "max_prior_sim": np.where(np.isfinite(mx), mx, -2.0),
         })
 
-    return clustered.groupBy("cluster").applyInPandas(
+    clustered = _nearest_lists(base, model, with_vec=True)
+    return clustered.groupBy("list_id").applyInPandas(
         _cluster_dedup,
         schema=("vec_id long, cluster long, n_prior_dups long, "
                 "keep boolean, max_prior_sim double"),
@@ -1786,42 +1729,19 @@ SELECT query_id, neighbor_id, sim, rank FROM ranked WHERE rank <= {ANN_FILTER_K}
 # --------------------------------------------------------------------------
 # GROUP-PARTITIONED vector search — the multi-tenant / per-shard index
 # shape: every query searches ONLY its own group's corpus partition
-# (tenant id, language, document type...).  The group key becomes a
-# pack-and-join key, so blocks of different groups never meet: the
-# equi-join on the group column co-partitions query packs with corpus
-# packs, and the matmul kernel is unchanged.  Contrast with
-# ann_filtered_topk (one global predicate): here the predicate is
-# "same group as the query", per query.
+# (tenant id, language, document type...).  ``cosine_topk(group_col=)``
+# makes the group key a pack-and-join key, so blocks of different
+# groups never meet: the broadcast equi-join on the group column pairs
+# query packs with corpus packs, and the matmul kernel is unchanged.
+# Contrast with ann_filtered_topk (one global predicate): here the
+# predicate is "same group as the query", per query.
 GROUPED_ANN_K = 5
-
-
-def grouped_cosine_topk(corpus: DataFrame, queries: DataFrame,
-                        k: int = GROUPED_ANN_K, group_col: str = "label",
-                        n_blocks: int = 4) -> DataFrame:
-    """(query_id, neighbor_id, sim, rank): top-``k`` neighbors within
-    the query's own ``group_col`` partition."""
-    qp = _pack_blocks(
-        queries, "vec_id", "embedding", 1,
-        keys=(group_col,), keys_schema=f"{group_col} int",
-    ).select(group_col, F.col("ids").alias("q_ids"), F.col("mat").alias("q_mat"))
-    cp = _pack_blocks(
-        corpus, "vec_id", "embedding", n_blocks,
-        keys=(group_col,), keys_schema=f"{group_col} int",
-    )
-    joined = cp.join(F.broadcast(qp), group_col)
-    cand = joined.mapInPandas(
-        _block_topk_kernel(k), schema="query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
 
 
 def q_grouped_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    return grouped_cosine_topk(emb, emb.filter(F.col("vec_id") < 8))
+    return cosine_topk(emb, emb.filter(F.col("vec_id") < 8), k=GROUPED_ANN_K,
+                       n_blocks=4, group_col="label")
 
 
 ORACLE_GROUPED_TOPK = f"""
@@ -1981,8 +1901,9 @@ FROM negexp GROUP BY query_id, vec_id
 # the float cosine queries, the search phase cannot drift by an ulp.
 #
 # Scale: quantization is map-only JVM column math (transform/aggregate,
-# no Python); search reuses the blocked-matmul shape of cosine_topk
-# with an int64 kernel; corpus never shuffled, queries broadcast.
+# no Python); search is cosine_topk's blocked top-k over the raw
+# quantized vectors (exact, see int8_topk); corpus never shuffled,
+# queries broadcast.
 # Recall vs the float baseline is gated in tests/test_round5_ops.py.
 INT8_SCALE = 127
 INT8_TOPK = 10
@@ -2017,64 +1938,19 @@ def int8_topk(corpus: DataFrame, queries: DataFrame, k: int = INT8_TOPK,
               n_blocks: int = 16) -> DataFrame:
     """Top-``k`` neighbors per query under the quantized integer dot
     product → (query_id, neighbor_id, dot_q, rank); ties break by
-    neighbor id (quantized scores tie often — determinism matters)."""
-    import numpy as np
-    import pandas as pd
+    neighbor id (quantized scores tie often — determinism matters).
 
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.array(pdf["qvec"].tolist(), dtype=np.int64)
-        return pd.DataFrame({
-            "blk": [int(pdf["blk"].iloc[0])],
-            "ids": [pdf["id"].to_numpy(np.int64)],
-            "mat": [mat.tobytes()],
-        })
+    The raw quantized vectors are packed as float64 and searched by
+    the float :func:`_blocked_topk` kernel.  That is exact: every
+    product and partial sum is an integer of magnitude at most
+    dim·127², far below 2^53, so each float dot IS the integer dot in
+    any accumulation order."""
+    def packed(df: DataFrame, n: int) -> DataFrame:
+        return _pack_blocks(int8_quantize(df, id_col, vec_col), "id", "qvec",
+                            n, unit=False)
 
-    def packed(df: DataFrame, nb: int) -> DataFrame:
-        return (
-            int8_quantize(df, id_col, vec_col)
-            .withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(nb)))
-            .groupBy("blk")
-            .applyInPandas(_pack, schema="blk long, ids array<long>, mat binary")
-        )
-
-    qp = packed(queries, 1).select(F.col("ids").alias("q_ids"),
-                                   F.col("mat").alias("q_mat"))
-    cp = packed(corpus, n_blocks)
-
-    def _kernel(batches):
-        for pdf in batches:
-            frames = []
-            for _, row in pdf.iterrows():
-                q_ids = np.asarray(row["q_ids"], dtype=np.int64)
-                c_ids = np.asarray(row["ids"], dtype=np.int64)
-                Q = np.frombuffer(row["q_mat"], dtype=np.int64).reshape(len(q_ids), -1)
-                C = np.frombuffer(row["mat"], dtype=np.int64).reshape(len(c_ids), -1)
-                dots = Q @ C.T  # exact int64: |dot| <= 64 * 127^2
-                self_mask = q_ids[:, None] == c_ids[None, :]
-                dots = np.where(self_mask, np.iinfo(np.int64).min, dots)
-                order = np.lexsort(
-                    (np.broadcast_to(c_ids, dots.shape), -dots), axis=1
-                )
-                take = order[:, :k]
-                frames.append(pd.DataFrame({
-                    "query_id": np.repeat(q_ids, take.shape[1]),
-                    "neighbor_id": c_ids[take].ravel(),
-                    "dot_q": np.take_along_axis(dots, take, axis=1).ravel(),
-                }))
-            out = pd.concat(frames) if frames else pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "dot_q": []})
-            yield out[out["dot_q"] > np.iinfo(np.int64).min]
-
-    cand = cp.join(F.broadcast(qp)).mapInPandas(
-        _kernel, schema="query_id long, neighbor_id long, dot_q long"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot_q").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _blocked_topk(packed(corpus, n_blocks), packed(queries, 1), k).select(
+        "query_id", "neighbor_id", F.col("sim").cast("long").alias("dot_q"), "rank")
 
 
 def q_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -310,19 +310,18 @@ def streaming_incremental_dedup_sketch(
 
 def emb_band_keys_udf(n_bits: int, rows_per_band: int, seed: int):
     """Map-only producer of ``array<long>`` band keys per vector —
-    the same numpy pipeline as the batch ``_emb_band_keys`` (matmul
-    against the seed-derived hyperplanes, sign bits, per-band integer
-    keys), fused into one pandas UDF so a stream needs no signature
-    aggregation state."""
+    the batch ``_emb_band_keys`` core (``hyperplane_band_keys`` against
+    the seed-derived hyperplanes) fused into one pandas UDF so a
+    stream needs no signature aggregation state."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    from grpc_map_reduce_spark.operators.similarity import hyperplanes
+    from grpc_map_reduce_spark.operators.similarity import (
+        hyperplane_band_keys,
+        hyperplanes,
+    )
 
-    r = rows_per_band
-    assert n_bits % r == 0
-    n_bands = n_bits // r
-    weights = (1 << np.arange(r, dtype=np.int64))
+    assert n_bits % rows_per_band == 0
 
     @pandas_udf("array<long>")
     def _keys(v: pd.Series) -> pd.Series:
@@ -330,29 +329,24 @@ def emb_band_keys_udf(n_bits: int, rows_per_band: int, seed: int):
             return pd.Series([], dtype=object)
         V = np.array(v.tolist(), dtype=np.float64)
         H = hyperplanes(seed, n_bits, V.shape[1])
-        bits = (V @ H.T) >= 0
-        keys = bits.reshape(len(V), n_bands, r).astype(np.int64) @ weights
-        return pd.Series(list(keys))
+        return pd.Series(list(hyperplane_band_keys(V, H, rows_per_band)))
 
     return _keys
 
 
 def cosine_sim_udf():
-    """Exact cosine of two vector columns, rounded to 6 dp — the
-    identical per-row numpy reduction as the batch rescore kernel, so
-    stream and batch sims are bit-equal."""
-    import numpy as np
+    """Exact cosine of two vector columns, rounded to 6 dp — the batch
+    rescore's own numpy core (``cosine_rows``), so stream and batch
+    sims are bit-equal."""
     from pyspark.sql.functions import pandas_udf
+
+    from grpc_map_reduce_spark.operators.similarity import cosine_rows
 
     @pandas_udf("double")
     def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
         if not len(va):
             return pd.Series([], dtype=float)
-        A = np.array(va.tolist(), dtype=np.float64)
-        B = np.array(vb.tolist(), dtype=np.float64)
-        A /= np.linalg.norm(A, axis=1, keepdims=True)
-        B /= np.linalg.norm(B, axis=1, keepdims=True)
-        return pd.Series(np.round(np.einsum("ij,ij->i", A, B), 6))
+        return pd.Series(cosine_rows(va, vb))
 
     return _cos
 

@@ -67,6 +67,54 @@ def test_int8_topk_recall_vs_float_baseline(spark, sf_dir):
     ]
     assert sum(recalls) / len(recalls) >= 0.8, recalls
 
+    # Worst-case inputs for the float kernel's exactness: 1-dim vectors
+    # quantize every component to ±127 (the largest product), and
+    # 64-dim sign vectors round every component up (127/8 → 16).  Every
+    # dot_q and the (dot desc, id) ranking must equal an int64 numpy
+    # recompute over the operator's own quantized vectors.
+    import numpy as np
+
+    from grpc_map_reduce_spark.operators.similarity import int8_quantize
+
+    rng = np.random.RandomState(5)
+    for dim in (1, 64):
+        rows = [(i, [float(x) for x in rng.choice([-1.0, 1.0], dim)])
+                for i in range(40)]
+        vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        qv = {r.id: np.array(r.qvec, dtype=np.int64)
+              for r in int8_quantize(vecs).collect()}
+        if dim == 1:
+            assert all(abs(int(v[0])) == 127 for v in qv.values())
+        got = {}
+        for r in int8_topk(vecs, vecs.filter(F.col("vec_id") < 6), k=5,
+                           n_blocks=4).collect():
+            got.setdefault(r.query_id, []).append((r.rank, r.neighbor_id, r.dot_q))
+        for q in range(6):
+            ranked = sorted((-int(qv[q] @ qv[c]), c) for c in qv if c != q)[:5]
+            want = [(i + 1, c, -d) for i, (d, c) in enumerate(ranked)]
+            assert sorted(got[q]) == want, (dim, q)
+
+
+def test_grouped_topk_string_group_col(spark, sf_dir):
+    """The group key of a grouped top-k may be any column type: the
+    packs read it from the input schema.  A string relabeling of the
+    int ``label`` groups must give the registered grouped query's rows."""
+    from pyspark.sql import functions as F
+
+    from grpc_map_reduce_spark.operators.similarity import (
+        GROUPED_ANN_K,
+        cosine_topk,
+        q_grouped_topk,
+    )
+    from grpc_map_reduce_spark.sources.tables import table
+
+    emb = table(spark, sf_dir, "embeddings").withColumn(
+        "label", F.concat(F.lit("g"), F.col("label").cast("string")))
+    got = cosine_topk(emb, emb.filter(F.col("vec_id") < 8), k=GROUPED_ANN_K,
+                      n_blocks=4, group_col="label").collect()
+    want = q_grouped_topk(spark, sf_dir).collect()
+    assert got and sorted(map(tuple, got)) == sorted(map(tuple, want))
+
 
 def test_source_overlap_kmv_exact_when_k_covers_union(spark):
     """With k >= |A ∪ B| the KMV estimate IS the exact Jaccard of the

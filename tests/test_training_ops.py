@@ -260,6 +260,9 @@ def test_centroid_operators_empty_corpus_returns_empty(spark):
     assert sd.count() == 0
     assert sd.columns == [
         "vec_id", "cluster", "n_prior_dups", "keep", "max_prior_sim"]
-    iv = ivf_topk(empty, empty, k=3, n_lists=4)
-    assert iv.count() == 0
-    assert iv.columns == ["query_id", "neighbor_id", "sim", "rank"]
+    queries = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id long, embedding array<float>")
+    for qs in (empty, queries):
+        iv = ivf_topk(empty, qs, k=3, n_lists=4)
+        assert iv.count() == 0
+        assert iv.columns == ["query_id", "neighbor_id", "sim", "rank"]

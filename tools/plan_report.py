@@ -14,8 +14,10 @@ listed with a note instead of a full audit.
 NOTE for plan-only tooling (ADVICE r6): several registry entries
 execute real work at DataFrame-CONSTRUCTION time — dedup_triangles
 runs an eager localCheckpoint of its edge table (the measured
-disk-peak fix) plus its wedge-count sizing aggregate, and
-ann_ivf_topk / embedding_kmeans run first()/count() model actions.
+disk-peak fix) plus its wedge-count sizing aggregate;
+ann_ivf_topk / embedding_kmeans / semdedup collect their centroid
+model with one first() per Lloyd round plus one for the final model
+(similarity._model_broadcast); and ann_auto_topk runs two count()s.
 Merely building those queries (e.g. for explain here or in
 test_plan_quality) executes their upstream chain; that is the
 documented tradeoff, not a regression signal.
