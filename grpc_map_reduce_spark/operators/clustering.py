@@ -347,13 +347,17 @@ GROUP BY split_a, split_b
 # docs are canonical-copy candidates; the iteration pattern is the
 # template for any fixed-point graph computation on DataFrames.
 #
-# Each iteration = one join (ranks onto edges) + one groupBy(dst) —
-# two shuffles on the node id, both AQE-managed; ranks are
-# lazy-checkpointed per round so the plan does not grow with K.
-# K is FIXED (not convergence-tested) so the DuckDB oracle can unroll
-# the same K rounds as chained CTEs; both engines round only the
-# final rank, and per-round double sums differ at ~1e-15 relative,
-# far under the 6 dp comparison.
+# The edge set is read ONCE: one ``inline`` of both orientations per
+# edge row builds the symmetric closure, which is hash-partitioned by
+# src, given its out-degree as a window count over that partitioning
+# (no aggregate, no join back) and persisted.  Pins, in order: the
+# node set (whose count gives 1/n), one lazy checkpoint per round, and
+# the eager final one.  Each round = one join (ranks onto edges) + one
+# groupBy(dst) that computes the new rank directly.  K is FIXED (not
+# convergence-tested) so the DuckDB oracle can unroll the same K
+# rounds as chained CTEs; both engines round only the final rank, and
+# per-round double sums differ at ~1e-15 relative, far under the 6 dp
+# comparison.
 PAGERANK_DAMPING = 0.85
 PAGERANK_ITERS = 3
 PAGERANK_EDGE_THRESHOLD = 0.008  # dense graph: ~6k edges at sf0.01
@@ -364,7 +368,16 @@ def pagerank(edges: DataFrame, damping: float = PAGERANK_DAMPING,
              edges_unique: bool = False) -> DataFrame:
     """(node, rank) after ``n_iter`` power iterations on the
     symmetrized ``edges`` (src/dst).  Nodes = every id in the edge
-    set; the symmetric closure means no dangling nodes.
+    set; the symmetric closure gives every node an out-edge and an
+    in-edge, so there are no dangling nodes and every node receives a
+    contribution each round — a round is one join of the ranks onto
+    the cached edges plus one ``groupBy(dst)`` whose aggregate IS the
+    new rank, ``(1-d)/n + d·Σ rank/outd``.
+
+    Pins: the node set (its count gives ``n``), one lazy checkpoint
+    per round, and an eager final checkpoint.  The symmetric edge
+    table with its out-degree is the one loop-invariant cache, built
+    from a single read of ``edges`` and released before returning.
 
     ``edges_unique=True`` asserts the input holds each undirected
     edge exactly once as a canonical (lo, hi) pair — true of every
@@ -374,52 +387,38 @@ def pagerank(edges: DataFrame, damping: float = PAGERANK_DAMPING,
     Leave False for arbitrary edge lists; a duplicated or
     both-orientations input would otherwise double-count degree and
     contributions."""
-    # Pin the incoming edge set FIRST: it is read by both union
-    # branches and (via sym) by the degree aggregate — without the
-    # checkpoint an expensive edge-gen lineage (the LSH pipeline)
-    # re-executes once per consumer branch inside the one action.
-    edges = iter_checkpoint(edges, eager=False)
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = edges.selectExpr(
+        "inline(array(struct(src, dst), struct(dst AS src, src AS dst)))")
     if not edges_unique:
         sym = sym.distinct()
-    sym = iter_checkpoint(sym, eager=False)
-    deg = sym.groupBy("src").agg(F.count("*").alias("outd"))
-    # Fold the out-degree onto each edge ONCE: every iteration then
-    # does one join (ranks) + one groupBy instead of re-deriving the
-    # degree aggregate per materialization.  The loop-invariant edge
-    # table is repartitioned by the join key and persist()-ed — NOT
-    # localCheckpoint-ed: a checkpoint scan reports Unknown
-    # partitioning, so every iteration would re-exchange the FULL
-    # edge set, while the cache keeps the hash partitioning visible
-    # and each iteration ships only the small rank table to it (the
-    # GraphX pattern: edges stay put, ranks move).
+    # The loop-invariant edge table is repartitioned by the join key,
+    # given its out-degree by a window over that same partitioning,
+    # and persist()-ed — NOT localCheckpoint-ed: a checkpoint scan
+    # reports Unknown partitioning, so every iteration would
+    # re-exchange the FULL edge set, while the cache keeps the hash
+    # partitioning visible and each iteration ships only the small
+    # rank table to it (the GraphX pattern: edges stay put, ranks
+    # move).  Serialized cache level, same policy as PIN_LEVEL: the
+    # dense diagnostic graph holds this cache resident across all K
+    # iterations, and the deserialized columnar default was a third of
+    # the 125x probe's 13 GB pool-sum peak.
     n_part = edges.sparkSession.sparkContext.defaultParallelism
-    # Serialized cache level for the loop-invariant edge table, same
-    # policy as PIN_LEVEL: the dense diagnostic graph holds this cache
-    # resident across all K iterations, and the deserialized columnar
-    # default was a third of the 125x probe's 13 GB pool-sum peak.
     sym_deg = (
-        sym.join(deg, "src").repartition(n_part, "src")
+        sym.repartition(n_part, "src")
+        .selectExpr("src", "dst", "count(1) OVER (PARTITION BY src) AS outd")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    nodes = iter_checkpoint(deg.select(F.col("src").alias("node")), eager=False)
-    n = nodes.count()
+    nodes = iter_checkpoint(sym_deg.selectExpr("src AS node").distinct(),
+                            eager=False)
+    n = max(nodes.count(), 1)  # no edges: no nodes, an empty result
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     for _ in range(n_iter):
-        contrib = (
+        ranks = iter_checkpoint(
             sym_deg.join(ranks, sym_deg.src == ranks.node)
             .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") / F.col("outd")).alias("c"))
-        )
-        ranks = iter_checkpoint(
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (F.lit((1 - damping) / n)
-                 + damping * F.coalesce("c", F.lit(0.0))).alias("rank"),
-            ),
+            .agg((F.lit((1 - damping) / n)
+                  + damping * F.sum(F.col("rank") / F.col("outd")))
+                 .alias("rank")),
             eager=False,
         )
     # Materialize the final ranks (cuts their lineage back to

@@ -434,17 +434,16 @@ def minhash_signatures(docs: DataFrame, n: int = 3,
     ``sets`` to share a caller's pinned sets instead."""
     if sets is None:
         sets = _shingle_sets(docs, n, pin=False)
-    hs = F.transform("sh_set", lambda x: x % MINHASH_P)
+    # SQL strings, not F.transform lambda trees: each F.* call is a
+    # Py4J round trip, and the 17 lambda trees cost ~2.4k of them.
     mins = [
-        F.array_min(
-            F.transform(F.col("_hs"), lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P)
-        ).alias(f"m{i}")
+        f"array_min(transform(_hs, h -> ({a} * h + {b}) % {MINHASH_P})) AS m{i}"
         for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
     ]
     return (
-        sets.filter(F.size("sh_set") > 0)
-        .select("doc_id", hs.alias("_hs"))
-        .select("doc_id", *mins)
+        sets.where("size(sh_set) > 0")
+        .selectExpr("doc_id", f"transform(sh_set, x -> x % {MINHASH_P}) AS _hs")
+        .selectExpr("doc_id", *mins)
     )
 
 
@@ -460,31 +459,32 @@ def minhash_signatures(docs: DataFrame, n: int = 3,
 LSH_MAX_BUCKET_DEFAULT = 1000
 
 
-def band_key_structs(components, rows_per_band: int) -> F.Column:
-    """``array<struct<band_idx, key>>`` from the 16 signature-component
-    columns — THE band-key format, single-sourced (round-11 review):
-    every band-bucket producer (batch ``_band_rows``, the incremental
-    split, the streaming corpus index, the stream-side key derivation)
-    must build keys through this expression, or stream-vs-batch and
-    Spark-vs-oracle bucket parity silently breaks on a format drift.
+def band_rows(sig: DataFrame, keep, rows_per_band: int,
+              components=None) -> DataFrame:
+    """``keep`` + (band_idx, key): one row per signature row per LSH
+    band — THE band-key format, single-sourced: every band-bucket
+    producer (batch :func:`_band_rows`, the incremental split, the
+    streaming corpus indexes, the stream-side key derivation) builds
+    its keys here, or stream-vs-batch and Spark-vs-oracle bucket
+    parity silently breaks on a format drift.
 
-    ``components`` is the list of 16 component Columns (``m0..m15``
-    for batch frames, ``element_at(sigs, i+1)`` for a stream's
-    signature array)."""
+    ``keep`` and ``components`` are SQL expression strings: ``keep``
+    the pass-through columns (``"doc_id"``, ``"doc_id AS match_id"``),
+    ``components`` the 16 signature components — ``m0..m15`` (the
+    default) for batch frames, ``element_at(ms.sigs, i+1)`` for a
+    stream's signature array.  Band j's key is its ``rows_per_band``
+    components joined by ``_``; the rows come from one ``inline`` of a
+    struct array, built as one string (no per-band Py4J calls)."""
     r = rows_per_band
     assert len(MINHASH_A) % r == 0, "rows_per_band must divide 16"
-    n_bands = len(MINHASH_A) // r
-    return F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band_idx"),
-                F.concat_ws(
-                    "_", *[components[j * r + k] for k in range(r)]
-                ).alias("key"),
-            )
-            for j in range(n_bands)
-        ]
+    if components is None:
+        components = [f"m{i}" for i in range(len(MINHASH_A))]
+    bands = ", ".join(
+        f"struct({j} AS band_idx, "
+        f"concat_ws('_', {', '.join(components[j * r:(j + 1) * r])}) AS key)"
+        for j in range(len(MINHASH_A) // r)
     )
+    return sig.selectExpr(*keep, f"inline(array({bands}))")
 
 
 def bucket_pairs(rows: DataFrame, member, max_bucket: int | None = None,
@@ -546,12 +546,8 @@ def bucket_pairs(rows: DataFrame, member, max_bucket: int | None = None,
 def _band_rows(docs: DataFrame, n: int, rows_per_band: int,
                sets: DataFrame | None) -> DataFrame:
     """(doc_id, band_idx, key): one row per doc per LSH band."""
-    sig = minhash_signatures(docs, n, sets=sets)
-    bands = band_key_structs(
-        [F.col(f"m{i}") for i in range(len(MINHASH_A))], rows_per_band)
-    return sig.select("doc_id", F.explode(bands).alias("b")).select(
-        "doc_id", F.col("b.band_idx").alias("band_idx"), F.col("b.key").alias("key")
-    )
+    return band_rows(minhash_signatures(docs, n, sets=sets), ["doc_id"],
+                     rows_per_band)
 
 
 def lsh_hot_buckets(docs: DataFrame, n: int = 3,
@@ -673,6 +669,28 @@ LSH_ROWS_PER_BAND = 1
 LSH_NEAR_DUP_THRESHOLD = 0.05
 
 
+def jaccard_scores(pairs: DataFrame) -> DataFrame:
+    """``pairs`` + (n_common, jaccard) from its two shingle-set columns
+    ``_sa``/``_sb``: the one exact-overlap score of every exact
+    rescore, batch (:func:`exact_rescore`) and streaming; Jaccard is
+    rounded to 6 dp."""
+    return pairs.selectExpr(
+        "*", "size(array_intersect(_sa, _sb)) AS n_common").selectExpr(
+        "*", "round(n_common / (size(_sa) + size(_sb) - n_common), 6) AS jaccard")
+
+
+def exact_rescore(cand: DataFrame, sets: DataFrame, a: str = "doc_a",
+                  b: str = "doc_b") -> DataFrame:
+    """``cand`` + (_sa, _sb, n_common, jaccard): each candidate pair
+    joined to its two docs' shingle sets (two shuffle joins on the
+    pair's id columns ``a``/``b``) and scored exactly — the rescore
+    step every exact LSH consumer shares.  Work is O(candidates); the
+    shingle inverted index is never self-joined."""
+    return jaccard_scores(
+        cand.join(sets.selectExpr(f"doc_id AS {a}", "sh_set AS _sa"), a)
+        .join(sets.selectExpr(f"doc_id AS {b}", "sh_set AS _sb"), b))
+
+
 def lsh_near_dup(docs: DataFrame, n: int = 3,
                  threshold: float = LSH_NEAR_DUP_THRESHOLD,
                  rows_per_band: int = LSH_ROWS_PER_BAND,
@@ -709,24 +727,9 @@ def lsh_near_dup(docs: DataFrame, n: int = 3,
         docs, n, rows_per_band=rows_per_band, sets=sets,
         max_bucket=max_bucket, bands=bands,
     ).select("doc_a", "doc_b")
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("_sa"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("_sb"))
-    n_common = F.size(F.array_intersect("_sa", "_sb"))
-    scored = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.size("_sa") + F.size("_sb") - F.col("n_common")),
-                6,
-            ),
-        )
-    )
     return (
-        scored.filter(F.col("jaccard") >= threshold)
+        exact_rescore(cand, sets)
+        .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
 
@@ -763,26 +766,14 @@ def containment_pairs(docs: DataFrame, n: int = 3,
     cand = minhash_candidates(
         docs, n, rows_per_band=rows_per_band, sets=sets, max_bucket=max_bucket
     ).select("doc_a", "doc_b")
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("_sa"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("_sb"))
-    scored = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("n_common", F.size(F.array_intersect("_sa", "_sb")))
-        .withColumn(
-            "cont_a_in_b", F.round(F.col("n_common") / F.size("_sa"), 6)
-        )
-        .withColumn(
-            "cont_b_in_a", F.round(F.col("n_common") / F.size("_sb"), 6)
-        )
-    )
     return (
-        scored.filter(F.greatest("cont_a_in_b", "cont_b_in_a") >= threshold)
-        .select(
-            "doc_a", "doc_b",
-            F.col("n_common").cast("long").alias("n_common"),
-            "cont_a_in_b", "cont_b_in_a",
+        exact_rescore(cand, sets)
+        .selectExpr(
+            "doc_a", "doc_b", "CAST(n_common AS BIGINT) AS n_common",
+            "round(n_common / size(_sa), 6) AS cont_a_in_b",
+            "round(n_common / size(_sb), 6) AS cont_b_in_a",
         )
+        .where(F.greatest("cont_a_in_b", "cont_b_in_a") >= threshold)
     )
 
 
@@ -887,26 +878,13 @@ def incremental_scored_pairs(docs: DataFrame, n: int = 3,
     exploded = _band_rows(docs, n, rows_per_band, sets).withColumn(
         "is_corpus", _side_is_corpus(F.col("doc_id"))
     )
-    cand = bucket_pairs(exploded, "doc_id", side="is_corpus").select(
-        F.col("a").alias("doc_id"), F.col("b").alias("match_id"))
-    a = sets.select(F.col("doc_id"), F.col("sh_set").alias("_sa"))
-    b = sets.select(F.col("doc_id").alias("match_id"), F.col("sh_set").alias("_sb"))
-    n_common = F.size(F.array_intersect("_sa", "_sb"))
-    scored = (
-        cand.join(a, "doc_id")
-        .join(b, "match_id")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.size("_sa") + F.size("_sb") - F.col("n_common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    cand = bucket_pairs(exploded, "doc_id", side="is_corpus").selectExpr(
+        "a AS doc_id", "b AS match_id")
+    return (
+        exact_rescore(cand, sets, "doc_id", "match_id")
+        .where(F.col("jaccard") >= threshold)
+        .select("doc_id", "match_id", "jaccard")
     )
-    return scored.select("doc_id", "match_id", "jaccard")
 
 
 def incremental_sketch_pairs(docs: DataFrame, n: int = 3,
@@ -1213,25 +1191,9 @@ def jaccard_estimate_calibration(docs: DataFrame, n: int = 3,
     cand = minhash_candidates(
         docs, n, rows_per_band=rows_per_band, sets=sets, max_bucket=None
     )
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("_sa"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("_sb"))
-    n_common = F.size(F.array_intersect("_sa", "_sb"))
     n_bands_total = len(MINHASH_A) // rows_per_band
-    scored = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.size("_sa") + F.size("_sb") - F.col("n_common")),
-                6,
-            ),
-        )
-    )
     return (
-        scored.groupBy("n_bands")
+        exact_rescore(cand, sets).groupBy("n_bands")
         .agg(
             F.count("*").alias("n_pairs"),
             F.sum(F.round(F.col("jaccard") * 1000000).cast("long"))
@@ -1429,24 +1391,8 @@ def sketch_confusion(docs: DataFrame, n: int = 3,
     cand = minhash_candidates(
         docs, n, rows_per_band=rows_per_band, sets=sets, max_bucket=None
     )
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("_sa"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("_sb"))
-    n_common = F.size(F.array_intersect("_sa", "_sb"))
-    scored = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.size("_sa") + F.size("_sb") - F.col("n_common")),
-                6,
-            ),
-        )
-    )
     return (
-        scored.groupBy(
+        exact_rescore(cand, sets).groupBy(
             (F.col("n_bands") >= min_bands).alias("sketch_kept"),
             (F.col("jaccard") >= threshold).alias("exact_kept"),
         )

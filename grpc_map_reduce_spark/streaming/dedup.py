@@ -13,15 +13,16 @@ stream-side shuffle of the corpus ever happens:
     path's ``groupBy(doc_id)`` signature aggregation would be a
     stateful streaming agg; fusing it into the map-only UDF removes
     the state entirely while producing bit-identical signatures);
-  * band keys are derived JVM-side from the signature array in the
-    same ``concat_ws("_", m_i...)`` format as the batch index;
+  * band keys are derived JVM-side from the signature array by the
+    batch index's own ``band_rows`` (same ``concat_ws("_", m_i...)``
+    format);
   * candidates come from a stream-static join against the corpus
     band-bucket table; multi-band duplicates collapse via
     ``dropDuplicates`` (bounded by the in-flight shard in the
     availableNow/replay harness; a production continuous stream would
     use ``dropDuplicatesWithinWatermark`` on an ingest timestamp);
   * the exact-Jaccard rescore is a second stream-static join against
-    the corpus shingle-set table, then pure Column math.
+    the corpus shingle-set table, scored by the batch ``jaccard_scores``.
 
 Output rows ``(doc_id, match_id, jaccard)`` append per micro-batch —
 exactly ``operators/dedup.incremental_scored_pairs`` (parity-gated in
@@ -45,7 +46,8 @@ from grpc_map_reduce_spark.operators.dedup import (
     SKETCH_THRESHOLD,
     _shingle_sets,
     _side_is_corpus,
-    band_key_structs,
+    band_rows,
+    jaccard_scores,
     minhash_signatures,
 )
 from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
@@ -94,6 +96,12 @@ def minhash_struct_udf(n: int = 3):
     return _ms.asNondeterministic()
 
 
+#: A stream row's 16 signature components, read from the map-only
+#: struct's ``sigs`` array (SQL strings for :func:`band_rows`).
+_STREAM_SIG_COMPONENTS = [
+    f"element_at(ms.sigs, {i + 1})" for i in range(len(MINHASH_A))]
+
+
 def corpus_index(docs: DataFrame, n: int = 3,
                  rows_per_band: int = LSH_ROWS_PER_BAND
                  ) -> tuple[DataFrame, DataFrame]:
@@ -103,16 +111,9 @@ def corpus_index(docs: DataFrame, n: int = 3,
     incrementally as shards are accepted."""
     corpus = docs.filter(_side_is_corpus(F.col("doc_id")))
     sets = _shingle_sets(corpus, n)
-    sig = minhash_signatures(corpus, n, sets=sets)
-    bands = band_key_structs(
-        [F.col(f"m{i}") for i in range(len(MINHASH_A))], rows_per_band)
-    buckets = sig.select(
-        F.col("doc_id").alias("match_id"), F.explode(bands).alias("b")
-    ).select("match_id", F.col("b.band_idx").alias("band_idx"),
-             F.col("b.key").alias("key"))
-    return buckets, sets.select(
-        F.col("doc_id").alias("match_id"), F.col("sh_set").alias("_sb")
-    )
+    buckets = band_rows(minhash_signatures(corpus, n, sets=sets),
+                        ["doc_id AS match_id"], rows_per_band)
+    return buckets, sets.selectExpr("doc_id AS match_id", "sh_set AS _sb")
 
 
 def streaming_incremental_dedup(doc_stream: DataFrame, buckets: DataFrame,
@@ -149,15 +150,8 @@ def streaming_incremental_dedup(doc_stream: DataFrame, buckets: DataFrame,
         )
         .filter(F.size("ms.sh_set") > 0)
     )
-    bands = band_key_structs(
-        [F.element_at("ms.sigs", i + 1) for i in range(len(MINHASH_A))],
-        rows_per_band)
-    exp = enriched.select(
-        "doc_id", *ts_cols, F.col("ms.sh_set").alias("_sa"),
-        F.explode(bands).alias("b")
-    ).select("doc_id", *ts_cols, "_sa",
-             F.col("b.band_idx").alias("band_idx"),
-             F.col("b.key").alias("key"))
+    exp = band_rows(enriched, ["doc_id", *ts_cols, "ms.sh_set AS _sa"],
+                    rows_per_band, _STREAM_SIG_COMPONENTS)
     joined = exp.join(buckets, ["band_idx", "key"])  # stream-static
     if ts_col is not None:
         cand = joined.dropDuplicatesWithinWatermark(
@@ -165,19 +159,9 @@ def streaming_incremental_dedup(doc_stream: DataFrame, buckets: DataFrame,
         ).drop(ts_col)
     else:
         cand = joined.dropDuplicates(["doc_id", "match_id"])
-    n_common = F.size(F.array_intersect("_sa", "_sb"))
     return (
-        cand.join(corpus_sets, "match_id")  # stream-static
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.size("_sa") + F.size("_sb") - F.col("n_common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
+        jaccard_scores(cand.join(corpus_sets, "match_id"))  # stream-static
+        .where(F.col("jaccard") >= threshold)
         .select("doc_id", "match_id", "jaccard")
     )
 
@@ -216,18 +200,10 @@ def corpus_sketch_index(docs: DataFrame, n: int = 3,
     corpus = docs.filter(_side_is_corpus(F.col("doc_id")))
     sig = minhash_signatures(corpus, n).localCheckpoint(
         eager=False, storageLevel=PIN_LEVEL)
-    bands = band_key_structs(
-        [F.col(f"m{i}") for i in range(len(MINHASH_A))], rows_per_band)
-    buckets = sig.select(
-        F.col("doc_id").alias("match_id"), F.explode(bands).alias("b")
-    ).select("match_id", F.col("b.band_idx").alias("band_idx"),
-             F.col("b.key").alias("key"))
-    sigs = sig.select(
-        F.col("doc_id").alias("match_id"),
-        F.array(*[F.col(f"m{i}") for i in range(len(MINHASH_A))])
-        .alias("_sigb"),
-    )
-    return buckets, sigs
+    buckets = band_rows(sig, ["doc_id AS match_id"], rows_per_band)
+    comps = ", ".join(f"m{i}" for i in range(len(MINHASH_A)))
+    return buckets, sig.selectExpr("doc_id AS match_id",
+                                   f"array({comps}) AS _sigb")
 
 
 def streaming_incremental_dedup_sketch(
@@ -265,14 +241,8 @@ def streaming_incremental_dedup_sketch(
         )
         .filter(F.size("ms.sh_set") > 0)
     )
-    bands = band_key_structs(
-        [F.element_at("ms.sigs", i + 1) for i in range(n_bands_total)], 1)
-    exp = enriched.select(
-        "doc_id", *ts_cols, F.col("ms.sigs").alias("_siga"),
-        F.explode(bands).alias("b")
-    ).select("doc_id", *ts_cols, "_siga",
-             F.col("b.band_idx").alias("band_idx"),
-             F.col("b.key").alias("key"))
+    exp = band_rows(enriched, ["doc_id", *ts_cols, "ms.sigs AS _siga"], 1,
+                    _STREAM_SIG_COMPONENTS)
     joined = exp.join(buckets, ["band_idx", "key"])  # stream-static
     if ts_col is not None:
         cand = joined.dropDuplicatesWithinWatermark(
@@ -280,21 +250,15 @@ def streaming_incremental_dedup_sketch(
         ).drop(ts_col)
     else:
         cand = joined.dropDuplicates(["doc_id", "match_id"])
-    agree = F.size(
-        F.filter(
-            F.zip_with("_siga", "_sigb", lambda a, b: a == b),
-            lambda x: x,
-        )
-    ).cast("long")
     return (
         cand.join(corpus_sigs, "match_id")  # stream-static, 16 longs
-        .withColumn("n_bands", agree)
-        .filter(F.col("n_bands") >= min_bands)
-        .select(
-            "doc_id", "match_id", "n_bands",
-            F.round(F.col("n_bands") / F.lit(n_bands_total), 6)
-            .alias("est_jaccard"),
-        )
+        .selectExpr(
+            "doc_id", "match_id",
+            "CAST(size(filter(zip_with(_siga, _sigb, (a, b) -> a = b),"
+            " x -> x)) AS BIGINT) AS n_bands")
+        .where(f"n_bands >= {min_bands}")
+        .selectExpr("doc_id", "match_id", "n_bands",
+                    f"round(n_bands / {n_bands_total}, 6) AS est_jaccard")
     )
 
 

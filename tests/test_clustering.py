@@ -93,6 +93,45 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     assert got == want
 
 
+def _numpy_pagerank(edges):
+    """{node: rank} by numpy power iteration on the symmetrized graph
+    (set semantics: duplicates and both orientations are one edge, a
+    self-loop is one out- and in-edge of its node)."""
+    import numpy as np
+
+    from grpc_map_reduce_spark.operators.clustering import (
+        PAGERANK_DAMPING,
+        PAGERANK_ITERS,
+    )
+
+    ids = sorted({v for e in edges for v in e})
+    ix = {v: i for i, v in enumerate(ids)}
+    n = len(ids)
+    adj = np.zeros((n, n))
+    for a, b in edges:
+        adj[ix[a], ix[b]] = adj[ix[b], ix[a]] = 1
+    outd = adj.sum(axis=1)
+    r = np.full(n, 1.0 / n)
+    for _ in range(PAGERANK_ITERS):
+        r = (1 - PAGERANK_DAMPING) / n + PAGERANK_DAMPING * (adj.T @ (r / outd))
+    return {v: round(float(r[ix[v]]), 6) for v in ids}
+
+
+def test_pagerank_dirty_edges_match_numpy_power_iteration(spark):
+    # Duplicate rows, both orientations of one edge and self-loops:
+    # the default (edges_unique=False) closure must collapse them, and
+    # every node of it has an in-edge, so each round's groupBy(dst)
+    # reaches every node without a join back to the node set.
+    from grpc_map_reduce_spark.operators.clustering import pagerank
+
+    edges = [(1, 2), (1, 2), (2, 1), (2, 3), (3, 3), (3, 4), (4, 5),
+             (5, 1), (5, 1), (6, 6), (7, 6), (6, 7)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {r["node"]: r["rank"] for r in pagerank(df).collect()}
+    assert got == _numpy_pagerank(edges)
+    assert pagerank(df.limit(0)).collect() == []
+
+
 def test_pagerank_edges_unique_matches_default_on_canonical_edges(spark):
     # The edges_unique=True fast path (skips the symmetric closure's
     # distinct) must be rank-identical to the default path whenever

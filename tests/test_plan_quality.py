@@ -556,3 +556,58 @@ def test_kmv_profile_single_scan_per_column(spark, sf_dir):
     plan = _plan(spark, sf_dir, "kmv_merge_profile")
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0, plan
     assert len(re.findall(r"\(\d+\) Scan ExistingRDD", plan)) == 8, plan
+
+
+def test_band_rows_build_py4j_budget(spark, sf_dir):
+    """The MinHash signatures and band keys are built from SQL
+    expression strings: building and analyzing the band-rows plan
+    takes a few dozen Py4J round trips.  The ``F.transform`` lambda
+    tree form took ~2.5k, every one a driver round trip on each LSH
+    query's construction path."""
+    import py4j.java_gateway as jg
+
+    from grpc_map_reduce_spark.operators.dedup import _band_rows, _shingle_sets
+
+    docs = table(spark, sf_dir, "documents")
+    # The tokenizer UDF's wrapping (~50 calls) is not what is gated.
+    sets = _shingle_sets(docs, 3, pin=False)
+    send = jg.GatewayClient.send_command
+    calls = [0]
+
+    def counting(client, *args, **kwargs):
+        calls[0] += 1
+        return send(client, *args, **kwargs)
+
+    jg.GatewayClient.send_command = counting
+    try:
+        _band_rows(docs, 3, 2, sets)._jdf.queryExecution().analyzed()
+    finally:
+        jg.GatewayClient.send_command = send
+    assert calls[0] <= 100, calls[0]
+
+
+def test_pagerank_pins_and_round_plan(spark, monkeypatch):
+    """PageRank reads its edges once into one cached symmetric table
+    (out-degree from a window, no aggregate or join back), pins the
+    node set, each round and the final ranks — 5 pins at K=3 — and
+    each round plans exactly one join and one aggregate (partial +
+    final), with no join back to the node set."""
+    from grpc_map_reduce_spark.operators import clustering
+
+    pinned = []
+    orig = clustering.iter_checkpoint
+
+    def record(df, eager=True):
+        pinned.append(explain_str(df))
+        return orig(df, eager)
+
+    monkeypatch.setattr(clustering, "iter_checkpoint", record)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long")
+    clustering.pagerank(edges, edges_unique=True).collect()
+    assert len(pinned) == clustering.PAGERANK_ITERS + 2
+    join_re = r"\(\d+\) (?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)"
+    for plan in pinned[1:-1]:
+        assert len(re.findall(join_re, plan)) == 1, plan
+        assert len(re.findall(r"\(\d+\) HashAggregate", plan)) == 2, plan
+        assert re.findall(r"\(\d+\) Window", plan), plan

@@ -36,7 +36,7 @@ from grpc_map_reduce_spark.plans.audit import explain_str
 
 ITERATIVE = {
     "dedup_clusters": "edge-gen == dedup_lsh_neardup; CC loop audited in test_lsh_recall/test_clustering",
-    "pagerank_neardup": "edge-gen == dedup_lsh_neardup; iteration plan audited in test_clustering",
+    "pagerank_neardup": "edge-gen == dedup_lsh_neardup; one edge read into one cached symmetric table; pins = node set + 1 per round + final; each round 1 join + 1 aggregate (test_plan_quality, plans/pr4)",
     "vocab_bpe_merges": "merge loop runs at plan-build time; gated exactly in test_bpe.py",
 }
 
