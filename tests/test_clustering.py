@@ -67,32 +67,6 @@ def test_cc_two_components_with_dups_and_self_loops(spark):
     assert got == {3: 3, 5: 3, 9: 3, 11: 11, 20: 11}
 
 
-def test_pagerank_matches_numpy_power_iteration(spark):
-    import numpy as np
-
-    from grpc_map_reduce_spark.operators.clustering import (
-        PAGERANK_DAMPING,
-        PAGERANK_ITERS,
-        pagerank,
-    )
-
-    edges = [(0, 1), (1, 2), (2, 3), (3, 0), (0, 2)]
-    got = {r["node"]: r["rank"] for r in
-           pagerank(spark.createDataFrame(edges, "src long, dst long")).collect()}
-
-    # numpy reference on the symmetrized graph
-    n = 4
-    adj = np.zeros((n, n))
-    for a, b in edges:
-        adj[a, b] = adj[b, a] = 1
-    outd = adj.sum(axis=1)
-    r = np.full(n, 1.0 / n)
-    for _ in range(PAGERANK_ITERS):
-        r = (1 - PAGERANK_DAMPING) / n + PAGERANK_DAMPING * (adj.T @ (r / outd))
-    want = {i: round(float(r[i]), 6) for i in range(n)}
-    assert got == want
-
-
 def _numpy_pagerank(edges):
     """{node: rank} by numpy power iteration on the symmetrized graph
     (set semantics: duplicates and both orientations are one edge, a
@@ -115,6 +89,15 @@ def _numpy_pagerank(edges):
     for _ in range(PAGERANK_ITERS):
         r = (1 - PAGERANK_DAMPING) / n + PAGERANK_DAMPING * (adj.T @ (r / outd))
     return {v: round(float(r[ix[v]]), 6) for v in ids}
+
+
+def test_pagerank_matches_numpy_power_iteration(spark):
+    from grpc_map_reduce_spark.operators.clustering import pagerank
+
+    edges = [(0, 1), (1, 2), (2, 3), (3, 0), (0, 2)]
+    got = {r["node"]: r["rank"] for r in
+           pagerank(spark.createDataFrame(edges, "src long, dst long")).collect()}
+    assert got == _numpy_pagerank(edges)
 
 
 def test_pagerank_dirty_edges_match_numpy_power_iteration(spark):

@@ -586,12 +586,13 @@ def test_band_rows_build_py4j_budget(spark, sf_dir):
     assert calls[0] <= 100, calls[0]
 
 
-def test_pagerank_pins_and_round_plan(spark, monkeypatch):
+def test_pagerank_round_plan(spark, monkeypatch):
     """PageRank reads its edges once into one cached symmetric table
-    (out-degree from a window, no aggregate or join back), pins the
-    node set, each round and the final ranks — 5 pins at K=3 — and
-    each round plans exactly one join and one aggregate (partial +
-    final), with no join back to the node set."""
+    (out-degree from a window, no aggregate or join back), and each
+    round pin — between the node-set pin and the final pin — plans
+    exactly one join and one aggregate (partial + final), with no join
+    back to the node set.  The pin count itself is pinned by
+    tests/test_checkpoint_recovery.py."""
     from grpc_map_reduce_spark.operators import clustering
 
     pinned = []
@@ -605,7 +606,6 @@ def test_pagerank_pins_and_round_plan(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long")
     clustering.pagerank(edges, edges_unique=True).collect()
-    assert len(pinned) == clustering.PAGERANK_ITERS + 2
     join_re = r"\(\d+\) (?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)"
     for plan in pinned[1:-1]:
         assert len(re.findall(join_re, plan)) == 1, plan

@@ -2,7 +2,7 @@
 """Dump ``explain("formatted")`` for named registered queries to files.
 
 Usage:
-    python tools/dump_plans.py [--pins] <repo_root> <out_dir> <suffix> <name>[=<alias>] ...
+    python tools/dump_plans.py <repo_root> <out_dir> <suffix> <name>[=<alias>] ...
 
 For each ``name`` the query's DataFrame is built against
 ``$SPARK_GRAFT_SF_DIR`` (default sf0.001 — plan shape only, so the
@@ -13,10 +13,10 @@ counterpart it replaces (e.g. ``dedup_lsh_neardup=dedup_lsh_neardup_sketch``
 run against the round-10 tree writes ``dedup_lsh_neardup_sketch_before.txt``
 from the exact path's plan).
 
-``--pins`` appends the plan of every frame the query pins through
-``plans.checkpoint.iter_checkpoint`` while it is built: an iterative
-query's rounds run at construction time, so its final frame alone
-shows only the last checkpoint scan.
+The plan of every frame the query pins through
+``plans.checkpoint.iter_checkpoint`` while it is built is appended as a
+``-- pin i`` section: an iterative query's rounds run at construction
+time, so its final frame alone shows only the last checkpoint scan.
 
 ``<repo_root>`` is prepended to ``sys.path`` so the same script can dump
 plans from a historical git worktree (the "before" side) and from HEAD.
@@ -29,15 +29,12 @@ import sys
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    pins = "--pins" in args
-    if pins:
-        args.remove("--pins")
-    repo, out_dir, suffix = args[:3]
-    specs = [s.split("=", 1) for s in args[3:]]
+    repo, out_dir, suffix = sys.argv[1], sys.argv[2], sys.argv[3]
+    specs = [s.split("=", 1) for s in sys.argv[4:]]
     sys.path.insert(0, repo)
 
     from grpc_map_reduce_spark import get_spark, registry
+    from grpc_map_reduce_spark.plans import checkpoint
     from grpc_map_reduce_spark.plans.audit import explain_str
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
@@ -46,19 +43,16 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = registry.all_queries()
     pinned: list[str] = []
-    if pins:
-        from grpc_map_reduce_spark.plans import checkpoint
+    orig = checkpoint.iter_checkpoint
 
-        orig = checkpoint.iter_checkpoint
+    def recording(df, eager=True):
+        pinned.append(explain_str(df, "formatted"))
+        return orig(df, eager)
 
-        def recording(df, eager=True):
-            pinned.append(explain_str(df, "formatted"))
-            return orig(df, eager)
-
-        # Operator modules bind the function at import: rebind them all.
-        for mod in list(sys.modules.values()):
-            if getattr(mod, "iter_checkpoint", None) is orig:
-                mod.iter_checkpoint = recording
+    # Operator modules bind the function at import: rebind them all.
+    for mod in list(sys.modules.values()):
+        if getattr(mod, "iter_checkpoint", None) is orig:
+            mod.iter_checkpoint = recording
     for spec in specs:
         name = spec[0]
         alias = spec[1] if len(spec) == 2 else name
